@@ -51,6 +51,47 @@ def test_fingerprint_path_changes_with_content(tmp_path):
     assert fingerprint_path(str(p)) != fp1
 
 
+def test_fingerprint_subsecond_same_size_rewrite(spark, tmp_path):
+    """A same-size rewrite whose mtime moves by less than one second is a
+    new snapshot: fingerprint_path and a fresh read's
+    fingerprint_dataframe both change (whole-second keys kept the old
+    fingerprint and served a stale artifact)."""
+    import os
+
+    from warp_pipes_spark.core.fingerprint import fingerprint_dataframe
+
+    p = str(tmp_path / "t.parquet")
+    spark.range(4).coalesce(1).write.parquet(p)
+    (part,) = [
+        os.path.join(p, f) for f in os.listdir(p) if f.endswith(".parquet")
+    ]
+    base = 1_700_000_000 * 10**9
+    os.utime(part, ns=(base, base + 100_000_000))
+    fp1 = fingerprint_path(p)
+    df1 = fingerprint_dataframe(spark.read.parquet(p))
+    with open(part, "rb") as f:
+        data = f.read()
+    with open(part, "wb") as f:  # same-size rewrite
+        f.write(data)
+    os.utime(part, ns=(base, base + 600_000_000))
+    assert fingerprint_path(p) != fp1
+    assert fingerprint_dataframe(spark.read.parquet(p)) != df1
+
+
+def test_cache_dir_spellings_share_entries(spark, docs, tmp_path, monkeypatch):
+    """Two spellings of one cache dir (relative with a trailing slash,
+    absolute) address one entry, and the second load is a memo hit."""
+    import os
+
+    monkeypatch.chdir(tmp_path)
+    rel = CacheManager("x/")
+    absolute = CacheManager(os.path.abspath("x"))
+    assert rel.cache_dir == absolute.cache_dir
+    rel.store(docs, "shared")
+    assert absolute.exists("shared")
+    assert absolute.load(spark, "shared") is rel.load(spark, "shared")
+
+
 def test_fingerprint_dataframe_lambda_counter_invariant(spark, tmp_path):
     """PySpark numbers higher-order-function lambda variables with a
     session-GLOBAL counter (``lambda x_1`` in a fresh session, ``x_417``
@@ -175,37 +216,30 @@ def test_cache_vacuum_bytes_evicts_oldest_until_under_budget(spark, docs, tmp_pa
     assert not mgr.exists("middle") and not mgr.exists("newest")
 
 
-def test_cache_store_async_logs_publish_failure(spark, docs, tmp_path, caplog):
-    """A failing write-behind publish must not fail the query but must
-    leave a warning (silent-retrain visibility), and the persist taken for
-    plan-sharing must be released."""
+def test_cache_failed_publish_recomputes(spark, docs, tmp_path, caplog, monkeypatch):
+    """A failing publish (full disk, bad permissions) costs a recompute,
+    never an error: get_or_compute returns the computed rows, logs a
+    warning, and leaves no published entry or staging dir behind."""
     import logging
-    import time as _time
+    import os as _os
+
+    from pyspark.sql.readwriter import DataFrameWriter
 
     mgr = CacheManager(str(tmp_path / "cf"))
 
-    # force the background store() to fail deterministically (a read-only
-    # cache dir won't do it: tests run as root, which bypasses mode bits)
-    def boom(df, fingerprint, meta=None):
-        raise RuntimeError("disk full")
+    # a read-only cache dir won't do it: tests run as root, which
+    # bypasses mode bits
+    def boom(self, path, *args, **kwargs):
+        raise OSError("disk full")
 
-    mgr.store = boom
+    monkeypatch.setattr(DataFrameWriter, "parquet", boom)
     with caplog.at_level(logging.WARNING, logger="warp_pipes_spark.pipes.cache"):
-        out = mgr.store_async(docs, "doomed")
-        assert out.count() == docs.count()  # foreground query unaffected
-        for _ in range(100):  # wait for the background publish attempt
-            if any("publish failed" in r.message for r in caplog.records):
-                break
-            _time.sleep(0.1)
+        out = mgr.get_or_compute(spark, "doomed", lambda: docs)
+        rows = sorted(tuple(r) for r in out.collect())
+    assert rows == sorted(tuple(r) for r in docs.collect())
     assert any("publish failed" in r.message for r in caplog.records)
-    # the persist taken for plan-sharing was released after the attempt
-    for _ in range(100):
-        lvl = docs.storageLevel
-        if not (lvl.useMemory or lvl.useDisk):
-            break
-        _time.sleep(0.1)
-    lvl = docs.storageLevel
-    assert not (lvl.useMemory or lvl.useDisk)
+    assert not mgr.exists("doomed")
+    assert _os.listdir(mgr.cache_dir) == []
 
 
 def test_cache_concurrent_writers_race(spark, docs, tmp_path):
@@ -240,22 +274,6 @@ def test_cache_concurrent_writers_race(spark, docs, tmp_path):
     # a late (losing) writer after publish is also safe
     mgr.store(docs, "contended")
     assert mgr.exists("contended")
-
-
-def test_store_async_serves_frame_and_publishes(spark, docs, tmp_path):
-    import time as _time
-
-    from warp_pipes_spark.pipes.cache import CacheManager
-
-    mgr = CacheManager(str(tmp_path / "wb"))
-    out = mgr.store_async(docs, "behind")
-    # the caller's frame is usable immediately (write-behind)
-    assert out.count() == docs.count()
-    deadline = _time.time() + 30
-    while not mgr.exists("behind") and _time.time() < deadline:
-        _time.sleep(0.2)
-    assert mgr.exists("behind"), "background publish never landed"
-    assert len(mgr.load(spark, "behind").collect()) == docs.count()
 
 
 def test_bounded_query_collect_guard(spark):

@@ -163,17 +163,9 @@ def test_cached_results_bit_equal_and_reused(spark, sf_dir, tmp_path):
     # the store pass must be bit-identical to the direct run
     assert first == direct
     # second call must serve the SAME parquet entry (exactly one cache
-    # dir), still bit-identical. Stores are write-behind since round 9
-    # (guide §2.6 overlap), so wait for the async publish before
-    # asserting on-disk state — without this the first listdir can count
-    # the in-flight staging dir as the entry, the second call then
-    # misses (entry not yet published) and its own staged write makes
-    # the later listdir see two dirs transiently.
+    # dir), still bit-identical
     import os
 
-    from tests.test_round8_ops import _wait_published
-
-    _wait_published(cache)
     entries = [d for d in os.listdir(cache) if not d.startswith("_")]
     assert len(entries) == 1
     again = sorted(
@@ -197,7 +189,6 @@ def test_cached_results_bit_equal_and_reused(spark, sf_dir, tmp_path):
     cached_results(
         Bm25Search(corpus=docs, k=5, b=0.5), qs, cache_dir=cache
     ).collect()
-    _wait_published(cache, n=2)
     assert len([d for d in os.listdir(cache) if not d.startswith("_")]) == 2
 
 

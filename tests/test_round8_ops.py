@@ -121,24 +121,6 @@ def test_robust_stats_nullable_value_col(spark):
     assert (b["n"], b["n_null"], b["median"], b["mad"]) == (1, 1, 5, 0)
 
 
-def _wait_published(cache_dir, n=1, timeout=60.0):
-    """Cache stores are write-behind since round 9 (guide §2.6 overlap):
-    poll until ``n`` published entries exist and no staging dir remains
-    before asserting on-disk state."""
-    import os
-    import time
-
-    names = []
-    t0 = time.time()
-    while time.time() - t0 < timeout:
-        names = os.listdir(cache_dir) if os.path.isdir(cache_dir) else []
-        pub = [x for x in names if ".staging-" not in x]
-        if len(pub) >= n and len(pub) == len(names):
-            return
-        time.sleep(0.05)
-    raise AssertionError(f"cache publish did not complete: {names}")
-
-
 def test_results_cache_k_prefix_serving(spark, tmp_path):
     # a ranking cached at k=10 serves any k' <= 10 as a rank slice
     # (deterministic tie-break => top-k' is a prefix of top-k); a k' > 10
@@ -162,7 +144,6 @@ def test_results_cache_k_prefix_serving(spark, tmp_path):
     r10 = cached_results(
         Bm25Search(corpus=docs, k=10), qs, cache_dir=cache
     ).collect()
-    _wait_published(cache)
     entries = sorted(os.listdir(cache))
     assert len(entries) == 1 and entries[0].split("_k")[-1] == "10"
     # k=5 request: served by slicing the k=10 entry — no new entry
@@ -178,13 +159,11 @@ def test_results_cache_k_prefix_serving(spark, tmp_path):
     cached_results(
         Bm25Search(corpus=docs, k=20), qs, cache_dir=cache
     ).collect()
-    _wait_published(cache, n=2)
     assert any(e.endswith("_k20") for e in os.listdir(cache))
     # a DIFFERENT engine config (b changed) must not serve from the family
     cached_results(
         Bm25Search(corpus=docs, k=5, b=0.5), qs, cache_dir=cache
     ).collect()
-    _wait_published(cache, n=3)
     assert len(os.listdir(cache)) == 3
 
 

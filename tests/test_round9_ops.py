@@ -272,61 +272,16 @@ def test_bm25_fan_est_dict_matches_join_probe(spark, tmp_path):
 
     # vocab over the cap falls back to the join probe (returns None)
     eng._TERMDF_MAP_MAX_ROWS = 1
-    from warp_pipes_spark.pipes.cache import _load_memo
-
-    _load_memo.clear()
     assert eng._termdf_map() is None
     assert eng._fan_est(qterms, stats) == want
 
 
-def test_inflight_publish_window_serves_live(spark, tmp_path, monkeypatch):
-    """The write-behind publish window (store_async returned, rename not
-    yet landed) must serve same-session readers the LIVE plan: exists()
-    true, load() returns the in-flight DataFrame, and the k-prefix scan
-    sees the entry — otherwise the next eval panel silently recomputes
-    the retrieval it was supposed to reuse and races a duplicate staged
-    write (observed: two cache dirs transiently on disk)."""
-    import os
-    import threading
-
-    from warp_pipes_spark.pipes import cache as cache_mod
-
-    gate = threading.Event()
-    real_store = cache_mod.CacheManager.store
-
-    def gated_store(self, df, fp, meta=None):
-        gate.wait(30)
-        return real_store(self, df, fp, meta)
-
-    monkeypatch.setattr(cache_mod.CacheManager, "store", gated_store)
-    m = cache_mod.CacheManager(str(tmp_path / "c"))
-    df = spark.range(5)
-    try:
-        m.store_async(df, "k1")
-        # inside the window: nothing on disk yet, but the entry is
-        # visible and serveable
-        assert not os.path.exists(os.path.join(m.cache_dir, "k1", "_SUCCESS"))
-        assert m.exists("k1")
-        assert m.inflight_names() == ["k1"]
-        live = m.load(spark, "k1")
-        assert sorted(r.id for r in live.collect()) == [0, 1, 2, 3, 4]
-    finally:
-        gate.set()
-    cache_mod._wait_inflight_publishes()
-    # after the publish lands: registry drained, served from disk
-    assert m.inflight_names() == []
-    assert m.exists("k1")
-    assert sorted(r.id for r in m.load(spark, "k1").collect()) == [0, 1, 2, 3, 4]
-    assert os.path.exists(os.path.join(m.cache_dir, "k1", "_SUCCESS"))
-
-
 def test_load_table_plan_memo_invalidation(spark, tmp_path):
-    """load_table memoizes the loaded PLAN per (session, path, mtime,
+    """load_table memoizes the loaded PLAN per (session, path, snapshot,
     row_id): same snapshot -> same immutable plan object (no re-listing),
     source rewrite -> fresh plan seeing the new content, row_id variant
     kept separate."""
     import os
-    import time
 
     sf = str(tmp_path)
     p = os.path.join(sf, "documents.parquet")
@@ -339,15 +294,52 @@ def test_load_table_plan_memo_invalidation(spark, tmp_path):
     assert a.count() == 3
     r = load_table(spark, sf, "documents", row_id=True)
     assert r is not a and "row_id" in r.columns and "row_id" not in a.columns
-    # rewrite the source: the memo must miss (mtime key) and the new
+    # rewrite the source: the memo must miss (snapshot key) and the new
     # plan must see the new content
-    time.sleep(0.01)  # ensure a distinct dir mtime even on coarse clocks
     spark.range(5).selectExpr("id AS doc_id", "'b' AS text").write.mode(
         "overwrite"
     ).parquet(p)
     c = load_table(spark, sf, "documents")
     assert c is not a
     assert c.count() == 5
+
+
+def test_load_table_misses_after_part_rewrite(spark, tmp_path):
+    """A part file rewritten in place, with the directory's mtime put
+    back, is a new snapshot: load_table must not serve the old plan
+    (whose file listing names the replaced file) and must see the new
+    rows."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from warp_pipes_spark.io import load_table
+
+    sf = str(tmp_path)
+    p = os.path.join(sf, "documents.parquet")
+    spark.range(3).selectExpr("id AS doc_id", "'a' AS text").coalesce(
+        1
+    ).write.parquet(p)
+    a = load_table(spark, sf, "documents")
+    assert a.count() == 3
+    dir_st = os.stat(p)
+    (part,) = [f for f in os.listdir(p) if f.endswith(".parquet")]
+    tmp = os.path.join(sf, "new.parquet")
+    pq.write_table(
+        pa.table({"doc_id": pa.array(range(5), pa.int64()), "text": ["b"] * 5}),
+        tmp,
+    )
+    os.replace(tmp, os.path.join(p, part))
+    crc = os.path.join(p, f".{part}.crc")
+    if os.path.exists(crc):
+        os.remove(crc)
+    os.utime(p, ns=(dir_st.st_atime_ns, dir_st.st_mtime_ns))
+    assert os.stat(p).st_mtime_ns == dir_st.st_mtime_ns
+    c = load_table(spark, sf, "documents")
+    assert c is not a
+    assert sorted(r.doc_id for r in c.collect()) == [0, 1, 2, 3, 4]
+    assert {r.text for r in c.collect()} == {"b"}
 
 
 def _subseq_rows():

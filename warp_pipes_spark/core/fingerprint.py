@@ -11,7 +11,7 @@ different machinery.
 
 Design notes for scale: fingerprints are computed driver-side over tiny
 config structures (never over data). Dataset fingerprints hash file-level
-metadata (path, size, mtime) rather than content, so fingerprinting a
+metadata (path, size, mtime_ns) rather than content, so fingerprinting a
 100 TB input is O(#files) metadata calls, not an O(data) scan.
 """
 
@@ -69,28 +69,43 @@ def get_fingerprint(obj: Any) -> str:
     return fingerprint_struct(obj)
 
 
-def fingerprint_path(path: str) -> str:
-    """Cheap stable snapshot hash of an on-disk dataset: file list + sizes +
-    mtimes. Replaces the reference's HF dataset `_fingerprint` for Parquet
-    inputs; O(#files), never scans data (100 TB-safe)."""
-    entries = []
-    if os.path.isdir(path):
+def snapshot_token(path: str):
+    """Which snapshot of ``path`` is on disk: a sorted tuple of the data
+    files' ``(relative name, size, st_mtime_ns)``. Names starting with
+    ``_`` or ``.`` (``_SUCCESS``, ``_wps_meta.json``, ``.crc`` sidecars)
+    are skipped at every level, as Spark's file readers skip them, so
+    rewriting such a sidecar keys nothing new while any rewrite of a part
+    file does, even within one second. O(#files) ``os.stat`` calls, never
+    a data scan. None when ``path`` is not a local file or directory (or
+    vanishes mid-walk): callers then neither memoize nor trust a key."""
+    try:
+        if os.path.isfile(path):
+            st = os.stat(path)
+            return ((os.path.basename(path), st.st_size, st.st_mtime_ns),)
+        if not os.path.isdir(path):
+            return None
+        entries = []
         for root, dirs, files in os.walk(path):
-            # os.walk yields directories in filesystem order, which varies
-            # across machines; sort in place so traversal (and therefore the
-            # hash) is deterministic for identical snapshots
-            dirs.sort()
-            for f in sorted(files):
-                p = os.path.join(root, f)
-                st = os.stat(p)
-                entries.append((os.path.relpath(p, path), st.st_size, int(st.st_mtime)))
-        entries.sort()
-    elif os.path.exists(path):
-        st = os.stat(path)
-        entries.append((os.path.basename(path), st.st_size, int(st.st_mtime)))
-    else:
-        entries.append(("__missing__", path, 0))
-    return fingerprint_struct(entries)
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            for f in files:
+                if f.startswith(("_", ".")):
+                    continue
+                st = os.stat(os.path.join(root, f))
+                rel = os.path.relpath(os.path.join(root, f), path)
+                entries.append((rel, st.st_size, st.st_mtime_ns))
+        return tuple(sorted(entries))
+    except OSError:
+        return None
+
+
+def fingerprint_path(path: str) -> str:
+    """Cheap stable snapshot hash of an on-disk dataset (its
+    :func:`snapshot_token`). Replaces the reference's HF dataset
+    `_fingerprint` for Parquet inputs; O(#files), never scans data."""
+    token = snapshot_token(path)
+    if token is None:
+        token = [("__missing__", path, 0)]
+    return fingerprint_struct(token)
 
 
 import weakref
@@ -125,9 +140,9 @@ def fingerprint_dataframe(df: Any) -> str:
 def _fingerprint_dataframe_uncached(df: Any) -> str:
     """Cross-session-stable fingerprint of a DataFrame's *contents as
     declared by its plan*: the canonicalized analyzed-plan string (exprIds
-    stripped — they are session-assigned) plus per-file (path, size, mtime)
-    stats of the plan's inputs (part filenames change on rewrite, so an
-    overwritten source changes the key). ``DataFrame.semanticHash()`` is NOT
+    stripped — they are session-assigned) plus per-file (path, size,
+    mtime_ns) stats of the plan's inputs (an overwritten source changes
+    the key, even within one second). ``DataFrame.semanticHash()`` is NOT
     stable across JVMs (observed: same read, different hash), so it is used
     only for in-memory relations, which cannot outlive the session anyway.
 
@@ -152,7 +167,7 @@ def _fingerprint_dataframe_uncached(df: Any) -> str:
         local = f[len("file://"):] if f.startswith("file://") else f
         try:
             st = os.stat(local)
-            stats.append((f, st.st_size, int(st.st_mtime)))
+            stats.append((f, st.st_size, st.st_mtime_ns))
         except OSError:  # non-local FS: the name alone still keys rewrites
             stats.append((f, -1, -1))
     struct: dict = {"plan": canon, "files": stats}

@@ -11,11 +11,14 @@ snapshot, assigned without any shuffle).
 from __future__ import annotations
 
 import os
-from typing import Dict, Iterable, Optional
+import weakref
+from typing import Any, Callable, Dict, Hashable, Iterable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from warp_pipes_spark.core.fingerprint import snapshot_token
 
 TESTDATA_TABLES = (
     "region",
@@ -44,31 +47,46 @@ NATURAL_KEYS: Dict[str, str] = {
 }
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.parquet(path)
+# per-session {(abs path, tag) -> (snapshot token, value)}: the one memo
+# for everything derived from an on-disk Parquet snapshot (artifact
+# loads, base-table plans, the BM25 termdf dict). Re-opening a path costs
+# a file listing, a footer read and several py4j round trips (~50-150 ms
+# of driver time) to rebuild a PLAN that is identical for the life of the
+# snapshot; this memoizes plans, never results (execution still reads
+# the files). The token is core.fingerprint.snapshot_token, so any
+# rewrite of a data file misses; keying one slot per (path, tag) drops
+# the superseded plan, and weak session keys never pin a stopped
+# session's DataFrames.
+_snapshot_memo: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 
 
-# per-session {(abs path, source mtime_ns, row_id) -> loaded base-table
-# DataFrame}. Every catalog query re-opens its base tables through
-# load_table (250 T() call sites): each call costs a file listing, a
-# Parquet footer read and several py4j round trips (~50-150 ms of pure
-# driver time) to rebuild a PLAN that is identical for the life of the
-# source snapshot. Memoizing the immutable plan object is exact — this
-# memoizes PLANS, never results (execution still reads the parquet
-# inputs every time), the mtime key invalidates when the source is
-# rewritten, and a restarted session (new object) never sees old
-# entries (weak keying also avoids pinning stopped sessions). Same
-# convention as pipes/cache.py's artifact-plan memo (round 8).
-import weakref
-
-_table_memo: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
-
-
-def _table_memo_key(path: str, row_id: bool):
+def memo_on_snapshot(
+    spark: SparkSession, path: str, build: Callable[[], Any], tag: Hashable = None
+) -> Any:
+    """``build()``, memoized per ``spark`` session on ``path``'s current
+    snapshot (and ``tag``, for several values derived from one path).
+    Unmemoized when the path is not a local snapshot."""
+    slot = (os.path.abspath(path), tag)
+    # token BEFORE build: a rewrite racing the build can only make the
+    # stored token older than the plan, which costs one rebuild
+    token = snapshot_token(slot[0])
     try:
-        return (os.path.abspath(path), os.stat(path).st_mtime_ns, row_id)
-    except Exception:  # missing path / odd FS: no memo, fail in read
-        return None
+        per_session = _snapshot_memo.setdefault(spark, {})
+    except TypeError:  # non-weakrefable session stub
+        per_session = None
+    if token is None or per_session is None:
+        return build()
+    hit = per_session.get(slot)
+    if hit is not None and hit[0] == token:
+        return hit[1]
+    value = build()
+    per_session[slot] = (token, value)
+    return value
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, memoized per snapshot."""
+    return memo_on_snapshot(spark, path, lambda: spark.read.parquet(path))
 
 
 def with_row_id(df: DataFrame, key: Optional[str] = None) -> DataFrame:
@@ -84,30 +102,22 @@ def with_row_id(df: DataFrame, key: Optional[str] = None) -> DataFrame:
 
 def load_table(spark: SparkSession, sf_dir: str, name: str, row_id: bool = False) -> DataFrame:
     path = os.path.join(sf_dir, f"{name}.parquet")
-    key = _table_memo_key(path, row_id)
-    per_session = None
-    if key is not None:
-        try:
-            per_session = _table_memo.setdefault(spark, {})
-        except TypeError:  # non-weakrefable session stub
-            per_session = None
-        if per_session is not None:
-            hit = per_session.get(key)
-            if hit is not None:
-                return hit
-    # Parquet TIMESTAMP(NANOS) (events.ts) is not a native Spark type: read
-    # nanos as long, then truncate to micros — the same conversion DuckDB
-    # applies when it coerces TIMESTAMP_NS to its micro TIMESTAMP.
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for field in df.schema.fields:
-        if field.name == "ts" and isinstance(field.dataType, T.LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    if row_id:
-        df = with_row_id(df, NATURAL_KEYS.get(name))
-    if per_session is not None:
-        per_session[key] = df
-    return df
+
+    def build() -> DataFrame:
+        # Parquet TIMESTAMP(NANOS) (events.ts) is not a native Spark type:
+        # read nanos as long, then truncate to micros — the same conversion
+        # DuckDB applies when it coerces TIMESTAMP_NS to its micro TIMESTAMP.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        df = spark.read.parquet(path)
+        for field in df.schema.fields:
+            if field.name == "ts" and isinstance(field.dataType, T.LongType):
+                df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+        if row_id:
+            df = with_row_id(df, NATURAL_KEYS.get(name))
+        return df
+
+    # every catalog query re-opens its base tables here (250 T() sites)
+    return memo_on_snapshot(spark, path, build, tag=("load_table", row_id))
 
 
 def load_tables(

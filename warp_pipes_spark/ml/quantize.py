@@ -328,10 +328,9 @@ class PqCosineTopK(Pipe):
             }
         )
         if not (manager.exists(fp + "_codes") and manager.exists(fp + "_books")):
-            # write-behind: the freshly trained codebooks and the in-memory
-            # codes plan serve THIS call while both artifacts publish
-            # concurrently (float64 round-trips Parquet exactly); later
-            # sessions load them
+            # the freshly trained codebooks serve THIS call (float64
+            # round-trips Parquet exactly) and the codes are read back from
+            # their published artifact; later sessions load both
             pq = ProductQuantizer(dim, m=self.m, k=self.n_codes, seed=self.seed).fit(
                 self.corpus, self.corpus_vec, self.corpus_id, self.train_sample
             )
@@ -340,13 +339,13 @@ class PqCosineTopK(Pipe):
                 for j in range(pq.codebooks.shape[0])
                 for c in range(pq.codebooks.shape[1])
             ]
-            manager.store_async(
+            manager.store(
                 spark.createDataFrame(
                     book_rows, "j int, c int, centroid array<double>"
                 ),
                 fp + "_books",
             )
-            codes = manager.store_async(
+            codes = manager.store(
                 self.corpus.select(
                     F.col(self.corpus_id).alias("neighbor_id"),
                     pq.encode_udf()(F.col(self.corpus_vec)).alias("codes"),

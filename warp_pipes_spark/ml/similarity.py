@@ -407,9 +407,8 @@ class LshCosineTopK(Pipe):
             }
         )
         if not manager.exists(fp):
-            # write-behind: this call queries the in-memory hash tables
-            # while the artifact publishes concurrently; later sessions load
-            return manager.store_async(ce, fp)
+            # publish once; this call and later sessions read the artifact
+            return manager.store(ce, fp)
         return manager.load(self.corpus.sparkSession, fp)
 
     def _planes(self) -> np.ndarray:
@@ -812,10 +811,10 @@ class IvfCosineTopK(Pipe):
         if not manager.exists(fp):
             C = self._train_centroids()
             rows = [(i, [float(x) for x in C[i]]) for i in range(len(C))]
-            # write-behind: the freshly trained matrix IS what a reload
-            # would return (float64 -> Parquet double round-trips exactly),
-            # so serve it directly while the artifact publishes
-            manager.store_async(
+            # the freshly trained matrix IS what a reload would return
+            # (float64 -> Parquet double round-trips exactly), so serve it
+            # directly once the artifact is published
+            manager.store(
                 spark.createDataFrame(rows, "cell int, centroid array<double>"), fp
             )
             return C
@@ -941,9 +940,8 @@ class IvfCosineTopK(Pipe):
             }
         )
         if not manager.exists(fp):
-            # write-behind: serve this call from the in-memory lists while
-            # the artifact publishes concurrently; later sessions load
-            return manager.store_async(ce, fp)
+            # publish once; this call and later sessions read the artifact
+            return manager.store(ce, fp)
         return manager.load(self.corpus.sparkSession, fp)
 
     def _transform(self, df: DataFrame, **kwargs) -> DataFrame:

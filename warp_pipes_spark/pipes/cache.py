@@ -8,6 +8,14 @@ transform is memoized under ``hash(input_fingerprint, pipe_fingerprint)``
 Spark has no content-addressed cross-session cache, so this module is the
 custom piece: a driver-side manager mapping fingerprints to Parquet paths.
 
+Publishing is synchronous and has one path, :meth:`CacheManager.store`:
+the call that computes an artifact writes it to a staging dir, renames
+it into place and returns the published Parquet. No background thread
+is started. A publish that fails (full disk, bad permissions) is logged
+and costs a recompute on the next call, never an error. Loads go
+through ``io.read_parquet``'s per-session memo, keyed on the artifact's
+snapshot token, so a republished artifact is never served stale.
+
 Completeness: the reference validates its zarr store by scanning for
 all-zero chunks (``caching.py:237-260``); Parquet writes are atomic at the
 job level (output committer), so existence of ``_SUCCESS`` is the
@@ -29,43 +37,9 @@ from pyspark.sql import DataFrame, SparkSession
 from warp_pipes_spark.core.fingerprint import (
     combine_fingerprints,
     fingerprint_dataframe,
-    fingerprint_path,
 )
 from warp_pipes_spark.core.pipe import Pipe
-
-
-# (app_id, artifact path, _SUCCESS mtime_ns) -> loaded DataFrame. A warm
-# indexed query re-opens the same handful of artifact directories every
-# time it is constructed (postings + seed + stats per BM25 engine, say
-# 3-4 spark.read.parquet calls at ~100 ms of driver/py4j each); the
-# DataFrame returned by read.parquet is an immutable plan over the file
-# listing taken at read time, so reusing the object for the same
-# (published) artifact is exact. The mtime key invalidates on republish
-# (store() renames a fresh staging dir into place -> new mtime), and
-# clear_all_artifact_caches() drops the memo wholesale. This memoizes
-# PLANS, never results: every artifact is still built from the parquet
-# inputs inside the run that uses it.
-_load_memo: dict = {}
-
-# (cache_dir, fingerprint) -> [DataFrame, Thread] for write-behind
-# publishes still in flight. Between store_async() returning and the
-# background rename landing, the entry is not yet on disk — a
-# same-session reader (the next eval panel in a bench run) would MISS,
-# silently recompute the whole retrieval it was supposed to reuse, and
-# race a duplicate staging write. Serving the live (persisted) plan from
-# this registry is exact: it is the very DataFrame being published.
-_inflight: dict = {}
-
-
-def _wait_inflight_publishes(timeout: float = 60.0) -> None:
-    """Join every in-flight write-behind publish thread (bounded)."""
-    for entry in list(_inflight.values()):
-        th = entry[1]
-        if th is not None:
-            try:
-                th.join(timeout)
-            except Exception:
-                pass
+from warp_pipes_spark.io import read_parquet
 
 
 def clear_all_artifact_caches() -> None:
@@ -83,11 +57,6 @@ def clear_all_artifact_caches() -> None:
     import shutil
     import tempfile
 
-    # a publish landing AFTER the wipe would resurrect its artifact into
-    # the "cold" cache — drain the write-behind queue first
-    _wait_inflight_publishes()
-    _inflight.clear()
-    _load_memo.clear()
     for d in glob.glob(
         os.path.join(tempfile.gettempdir(), "warp_pipes_spark_*")
     ):
@@ -114,44 +83,17 @@ class CacheManager:
     artifact and discards its own staging dir."""
 
     def __init__(self, cache_dir: str):
-        self.cache_dir = cache_dir
-        os.makedirs(cache_dir, exist_ok=True)
+        self.cache_dir = os.path.abspath(cache_dir)
+        os.makedirs(self.cache_dir, exist_ok=True)
 
     def path_for(self, fingerprint: str) -> str:
         return os.path.join(self.cache_dir, fingerprint)
 
     def exists(self, fingerprint: str) -> bool:
-        if (self.cache_dir, fingerprint) in _inflight:
-            return True
         return os.path.exists(os.path.join(self.path_for(fingerprint), "_SUCCESS"))
 
-    def inflight_names(self) -> list:
-        """Fingerprints with a write-behind publish still in flight for
-        THIS cache dir — not yet listable on disk but serveable live."""
-        return [fp for (cdir, fp) in list(_inflight) if cdir == self.cache_dir]
-
     def load(self, spark: SparkSession, fingerprint: str) -> DataFrame:
-        entry = _inflight.get((self.cache_dir, fingerprint))
-        if entry is not None:
-            return entry[0]
-        path = self.path_for(fingerprint)
-        key = self._memo_key(spark, path)
-        if key is not None:
-            hit = _load_memo.get(key)
-            if hit is not None:
-                return hit
-        df = spark.read.parquet(path)
-        if key is not None:
-            _load_memo[key] = df
-        return df
-
-    @staticmethod
-    def _memo_key(spark: SparkSession, path: str):
-        try:
-            mtime = os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns
-            return (spark.sparkContext.applicationId, path, mtime)
-        except Exception:  # unpublished artifact / Connect: no memo
-            return None
+        return read_parquet(spark, self.path_for(fingerprint))
 
     def update_meta(self, fingerprint: str, extra: dict) -> None:
         """Merge scalar fields into a published artifact's sidecar meta.
@@ -183,107 +125,32 @@ class CacheManager:
             return {}
 
     def store(self, df: DataFrame, fingerprint: str, meta: Optional[dict] = None) -> DataFrame:
+        """Publish ``df`` under ``fingerprint`` and return the published
+        artifact. A failed publish returns ``df`` itself, unpublished: the
+        cache is a memo, not the result, so the next call recomputes."""
         import shutil
         import uuid
 
         path = self.path_for(fingerprint)
         staging = f"{path}.staging-{uuid.uuid4().hex}"
-        df.write.mode("overwrite").parquet(staging)
-        with open(os.path.join(staging, "_wps_meta.json"), "w") as f:
-            json.dump({"fingerprint": fingerprint, "written_at": time.time(), **(meta or {})}, f)
         try:
+            df.write.mode("overwrite").parquet(staging)
+            with open(os.path.join(staging, "_wps_meta.json"), "w") as f:
+                json.dump({"fingerprint": fingerprint, "written_at": time.time(), **(meta or {})}, f)
             os.rename(staging, path)  # atomic publish
-        except OSError:
-            # a concurrent writer published first: same fingerprint = same
-            # content — use theirs, drop ours
-            shutil.rmtree(staging, ignore_errors=True)
-        return self.load(df.sparkSession, fingerprint)
-
-    def store_async(
-        self,
-        df: DataFrame,
-        fingerprint: str,
-        meta: Optional[dict] = None,
-        release: bool = True,
-    ) -> DataFrame:
-        """Write-behind publish: kick the Parquet write to a background
-        thread and return ``df`` itself immediately, so the FIRST query
-        over a freshly built artifact (LSH tables, IVF lists) is served
-        from the in-memory plan while the artifact publishes concurrently
-        — later sessions ``load`` it. The atomic staging-dir rename makes
-        racing writers (including a second cold caller in this session)
-        safe: one publishes, the others discard content-identical staging
-        dirs. Falls back to a synchronous ``store`` if the Spark thread
-        machinery is unavailable. Publish failures don't fail the query
-        (the cache is a memo, not the result — the next cold call simply
-        rebuilds) but ARE logged at warning level so a persistently
-        failing publish (full disk, bad permissions) is visible instead
-        of silently retraining every session.
-
-        ``df`` is persisted before the fork so the background write and
-        the foreground query share one materialization of the plan —
-        without this an expensive plan (e.g. a PQ encode UDF over the
-        whole corpus) executes at least twice, competing for the same
-        executors. The persist is released once the publish completes —
-        UNLESS ``release=False``: a caller whose returned plan is
-        consumed repeatedly AFTER the publish (the results cache: a PRF
-        feedback pass references the first-pass ranking several times)
-        must keep the persist, or the publish thread yanks it mid-query
-        and every later reference recomputes the full plan. Such
-        persists are small by contract (top-k results tables) and are
-        reclaimed by ``spark.catalog.clearCache()`` or the
-        ContextCleaner once the plan is garbage collected."""
-
-        we_persisted = False
-        try:
-            lvl = df.storageLevel
-            if not (lvl.useMemory or lvl.useDisk):
-                df.persist()
-                we_persisted = True
         except Exception:
-            pass
-
-        inflight_key = (self.cache_dir, fingerprint)
-        inflight_entry = [df, None]
-
-        def _publish():
-            try:
-                self.store(df, fingerprint, meta)
-            except Exception:
+            shutil.rmtree(staging, ignore_errors=True)
+            if not self.exists(fingerprint):
                 logger.warning(
-                    "write-behind cache publish failed for %s (artifact will "
-                    "be rebuilt next session)",
+                    "cache publish failed for %s (artifact will be rebuilt "
+                    "on next use)",
                     fingerprint,
                     exc_info=True,
                 )
-            finally:
-                _inflight.pop(inflight_key, None)
-                if we_persisted and release:
-                    try:
-                        df.unpersist(blocking=False)
-                    except Exception:
-                        pass
-
-        try:
-            from pyspark import InheritableThread
-
-            # registered BEFORE start so a reader never sees a gap; the
-            # publish thread pops this same (mutated-in-place) entry
-            _inflight[inflight_key] = inflight_entry
-            t = InheritableThread(target=_publish, daemon=True)
-            t.start()
-            inflight_entry[1] = t
-        except Exception:
-            # sync fallback: _publish never runs, so release the persist
-            # here — otherwise every fallback call leaks a cached plan
-            _inflight.pop(inflight_key, None)
-            if we_persisted:
-                try:
-                    df.unpersist(blocking=False)
-                except Exception:
-                    pass
-            return self.store(df, fingerprint, meta)
-        return df
+                return df
+            # a concurrent writer published first: same fingerprint = same
+            # content — use theirs, drop ours
+        return self.load(df.sparkSession, fingerprint)
 
     def get_or_compute(
         self,

@@ -612,35 +612,31 @@ class Bm25Search(Pipe):
     def _termdf_map(self) -> "dict | None":
         """term -> df as a driver dict, read straight from the termdf
         artifact's Parquet files with pyarrow — ZERO Spark jobs — and
-        memoized per published artifact (the ``CacheManager.load`` memo
-        convention: path + _SUCCESS mtime, so a republish invalidates).
-        None when the index is unmaterialized, the artifact is missing,
-        or the vocabulary exceeds the driver-memory cap."""
+        memoized per artifact snapshot (``io.memo_on_snapshot``, so a
+        republish invalidates). None when the index is unmaterialized,
+        the artifact is missing, or the vocabulary exceeds the
+        driver-memory cap."""
         if not self.materialize_index:
             return None
-        from warp_pipes_spark.pipes.cache import CacheManager, _load_memo
+        from warp_pipes_spark.io import memo_on_snapshot
+        from warp_pipes_spark.pipes.cache import CacheManager
 
         manager = CacheManager(self.index_cache_dir)
         fp = self._index_fingerprint() + "_termdf"
         if not manager.exists(fp):
             return None
         path = manager.path_for(fp)
-        try:
-            mtime = os.stat(os.path.join(path, "_SUCCESS")).st_mtime_ns
-        except OSError:
-            return None
-        key = ("termdf_map", path, mtime)
-        if key in _load_memo:
-            return _load_memo[key]
-        result = None
-        try:
-            import glob as _glob
+        cap = self._TERMDF_MAP_MAX_ROWS
 
-            import pyarrow.parquet as pq
+        def build() -> "dict | None":
+            try:
+                import glob as _glob
 
-            files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-            n_rows = sum(pq.read_metadata(f).num_rows for f in files)
-            if n_rows <= self._TERMDF_MAP_MAX_ROWS:
+                import pyarrow.parquet as pq
+
+                files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
+                if sum(pq.read_metadata(f).num_rows for f in files) > cap:
+                    return None
                 result = {}
                 for f in files:
                     t = pq.read_table(f, columns=["term", "df"])
@@ -648,10 +644,13 @@ class Bm25Search(Pipe):
                         zip(t.column("term").to_pylist(),
                             t.column("df").to_pylist())
                     )
-        except Exception:
-            result = None
-        _load_memo[key] = result
-        return result
+                return result
+            except Exception:
+                return None
+
+        return memo_on_snapshot(
+            self.corpus.sparkSession, path, build, tag=("termdf_map", cap)
+        )
 
     def _fan_est(self, qterms: DataFrame, stats: DataFrame) -> int:
         """Exact scoring fan-out Σ df(t) over the batch's query-term

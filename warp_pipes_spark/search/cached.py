@@ -24,6 +24,10 @@ harnesses call :func:`clear_results_cache` before timing, so their first
 eval-tier row is a true cold run and within-run reuse is exactly the
 reuse a production panel would see. The engine queries themselves
 (q32/q217) do NOT route through this cache.
+
+Publishing is synchronous (``CacheManager.store``): the first panel's
+ranking is on disk before :func:`cached_results` returns, and that panel
+reads it back from Parquet like every later one.
 """
 
 from __future__ import annotations
@@ -53,15 +57,7 @@ def results_cache_dir() -> str:
 
 
 def clear_results_cache() -> None:
-    # a write-behind publish landing AFTER the wipe would resurrect its
-    # entry into the "cold" cache — drain the queue first
-    from warp_pipes_spark.pipes.cache import _inflight, _wait_inflight_publishes
-
-    _wait_inflight_publishes()
-    rdir = results_cache_dir()
-    for key in [k for k in list(_inflight) if k[0] == rdir]:
-        _inflight.pop(key, None)
-    shutil.rmtree(rdir, ignore_errors=True)
+    shutil.rmtree(results_cache_dir(), ignore_errors=True)
 
 
 def cached_results(
@@ -100,14 +96,12 @@ def cached_results(
     )
     prefix = family + "_k"
     spark = queries.sparkSession
-    # smallest cached depth that covers the request = cheapest read;
-    # in-flight write-behind entries count (manager serves them live)
+    # smallest cached depth that covers the request = cheapest read
     best = None
     try:
         names = os.listdir(manager.cache_dir)
     except OSError:
         names = []
-    names = set(names) | set(manager.inflight_names())
     for name in names:
         if not name.startswith(prefix):
             continue
@@ -136,21 +130,6 @@ def cached_results(
             lambda: out,
             meta={"pipe": type(pipe).__name__},
         )
-    # write-behind publish (guide §2.6 overlap): the first panel's OWN
-    # consumption runs from the live (persisted) plan while the cache
-    # entry publishes on a background thread — an eager store here
-    # serialized the whole retrieval job AHEAD of every independent
-    # sibling branch of the calling panel (q138's dense leg waited for
-    # the BM25 leg's store to finish before its own stages could start;
-    # as one lazy plan the DAG scheduler overlaps them). Later panels
-    # load the published artifact as before; racing writers are safe
-    # (atomic staging rename, content-identical losers discarded).
-    # release=False: the returned live plan may be referenced several
-    # times after the publish completes (PRF's feedback pass), and the
-    # persisted table is only k x |Q| rows — clearCache/GC reclaims it
-    return manager.store_async(
-        out,
-        f"{prefix}{k}",
-        meta={"pipe": type(pipe).__name__, "k": k},
-        release=False,
+    return manager.store(
+        out, f"{prefix}{k}", meta={"pipe": type(pipe).__name__, "k": k}
     )
