@@ -148,6 +148,31 @@ def test_predict_cache_equals_direct(spark, docs, tmp_path):
     assert mgr.exists(fp)
 
 
+def test_predict_misses_after_source_rewrite(spark, tmp_path):
+    """Without an input_fingerprint, Predict keys its vectors on the
+    input's content fingerprint: rewriting the Parquet source in place
+    must miss the cache (``semanticHash`` is equal for both reads, so the
+    old vectors came back)."""
+
+    def length_model(texts):
+        return np.array([[float(len(t)), 1.0] for t in texts])
+
+    src = str(tmp_path / "docs.parquet")
+    predict = Predict(
+        length_model, CacheManager(str(tmp_path / "cache")), model_fingerprint="len-v1"
+    )
+
+    def run(texts):
+        spark.createDataFrame(
+            list(enumerate(texts)), "row_id long, text string"
+        ).write.mode("overwrite").parquet(src)
+        out = predict(spark.read.parquet(src)).collect()
+        return {r["row_id"]: r["vector"][0] for r in out}
+
+    assert run(["a", "bb"]) == {0: 1.0, 1: 2.0}
+    assert run(["cccc", "ddddd"]) == {0: 4.0, 1: 5.0}
+
+
 def test_cache_vacuum_removes_only_old_entries(spark, docs, tmp_path):
     import json as _json
     import os as _os

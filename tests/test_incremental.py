@@ -105,3 +105,42 @@ def test_incremental_minhash_near_dup_gate(spark):
     # within-side near-dups (10~11, 1~3) never appear
     assert (10, 11) not in pairs and (11, 10) not in pairs
     assert all(r["jaccard"] >= 0.3 for r in out)
+
+
+def test_ivf_centroids_memoized_per_snapshot(spark, sf_dir, tmp_path):
+    """Serving the centroids again runs no Spark job; republishing the
+    artifact under the same fingerprint serves the new matrix."""
+    import os
+    import shutil
+
+    import numpy as np
+
+    from warp_pipes_spark.ml.similarity import IvfCosineTopK
+    from warp_pipes_spark.pipes.cache import CacheManager
+
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    mk = lambda: IvfCosineTopK(  # noqa: E731
+        corpus=emb, n_centroids=4, seed=13, centroid_cache_dir=str(tmp_path)
+    )
+    c1 = mk()._centroids()  # trains + stores
+    sc = spark.sparkContext
+    sc.setJobGroup("ivf_centroids_memo", "second _centroids call")
+    try:
+        c2 = mk()._centroids()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert sc.statusTracker().getJobIdsForGroup("ivf_centroids_memo") == []
+    assert np.array_equal(c1, c2)
+
+    (fp,) = [d for d in os.listdir(tmp_path) if not d.startswith(".")]
+    manager = CacheManager(str(tmp_path))
+    shutil.rmtree(manager.path_for(fp))
+    new = c1[::-1] * 0.5
+    manager.store(
+        spark.createDataFrame(
+            [(i, [float(x) for x in new[i]]) for i in range(len(new))],
+            "cell int, centroid array<double>",
+        ),
+        fp,
+    )
+    assert np.array_equal(mk()._centroids(), new)

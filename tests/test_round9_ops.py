@@ -435,3 +435,42 @@ def test_wildcard_strategies_match_naive_like(spark, tmp_path, monkeypatch):
     for got in (sparse, dense):
         assert got.exceptAll(naive).count() == 0
         assert naive.exceptAll(got).count() == 0
+
+
+def test_bm25_fan_est_collect_cap_falls_back(spark, tmp_path, monkeypatch):
+    """``_fan_est`` collects a bounded share of the query-term rows; a
+    batch over the cap takes the join probe, with the same fan-out and
+    the same top-k rows."""
+    from warp_pipes_spark.search.bm25 import Bm25Search
+
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma"), (2, "alpha beta"), (3, "alpha delta")],
+        ["doc_id", "text"],
+    )
+    eng = Bm25Search(corpus=docs, k=2, index_cache_dir=str(tmp_path / "bm25"))
+    qs = spark.createDataFrame(
+        [(1, "alpha zzz_oov"), (2, "beta gamma delta")], ["query_id", "text"]
+    )
+    stats = eng._term_stats(eng._index())
+    qterms = eng._query_legs(qs)
+    assert eng._termdf_map() is not None
+    want = eng._fan_est(qterms, stats)
+    rows = sorted(map(tuple, eng(qs).collect()))
+
+    collected = []
+    frame_cls = type(qterms)  # the session's concrete DataFrame class
+    collect = frame_cls.collect
+
+    def spy(df):
+        out = collect(df)
+        collected.append(len(out))
+        return out
+
+    monkeypatch.setattr(Bm25Search, "_FAN_EST_COLLECT_MAX_ROWS", 1)
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    assert eng._fan_est(qterms, stats) == want == 3 + 0 + 2 + 1 + 1
+    # a partial term collect (2 rows per partition at most, of 5), then
+    # the one-row join probe
+    assert len(collected) == 2 and collected[0] < 5 and collected[1] == 1
+    monkeypatch.setattr(frame_cls, "collect", collect)
+    assert sorted(map(tuple, eng(qs).collect())) == rows

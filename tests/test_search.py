@@ -886,3 +886,82 @@ def test_bm25_prune_ineligible_configs_fall_back(spark, sf_dir):
         corpus=docs, aux_text_col="aux", aux_weight=-0.5,
         scale_aux_weight=True,
     )._maxscore_eligible()
+
+
+def test_index_evaluates_query_batch_once(spark, tmp_path):
+    """Index materializes its query frame once per call: a BM25 + IVF
+    chain scans the queries several times (fan-out probe, seed join,
+    fan-out join, IVF probe), and each scan of an unmaterialized frame
+    re-runs the caller's Python source and UDFs. The rows equal the
+    engines composed by hand through rrf_fuse."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from warp_pipes_spark.ml.similarity import IvfCosineTopK
+    from warp_pipes_spark.search.bm25 import Bm25Search
+    from warp_pipes_spark.search.index import Index
+    from warp_pipes_spark.search.result import rrf_fuse, topk_results
+
+    words = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta", "eta"]
+    rng = np.random.RandomState(3)
+    docs = spark.createDataFrame(
+        [(i, " ".join(rng.choice(words, 4))) for i in range(40)],
+        "doc_id long, text string",
+    )
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in rng.randn(4)]) for i in range(40)],
+        "vec_id long, embedding array<double>",
+    )
+    bm25 = Bm25Search(corpus=docs, k=5, index_cache_dir=str(tmp_path / "bm25"))
+    ivf = IvfCosineTopK(
+        corpus=vecs, k=5, n_centroids=4, n_probe=2, query_id="query_id",
+        exclude_self=False, centroid_cache_dir=str(tmp_path / "ivf_c"),
+        index_cache_dir=str(tmp_path / "ivf_i"),
+    )
+    index = Index(
+        corpus=docs, engines=[bm25, ivf], k=3,
+        merge_previous_results=True, merge_strategy="rrf",
+    )
+    # warm the artifacts, so the counted call below is a serving batch
+    warm = spark.createDataFrame(
+        [(0, "alpha", [1.0, 0.0, 0.0, 0.0])],
+        "query_id long, raw string, embedding array<double>",
+    )
+    index(warm.withColumnRenamed("raw", "text")).collect()
+
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def count_rows(s: pd.Series) -> pd.Series:
+        evaluated.add(len(s))
+        return s
+
+    n_q = 6
+    raw = spark.createDataFrame(
+        [
+            (q, " ".join(rng.choice(words, 2)), [float(x) for x in rng.randn(4)])
+            for q in range(1, n_q + 1)
+        ],
+        "query_id long, raw string, embedding array<double>",
+    )
+    queries = raw.select(
+        "query_id",
+        pandas_udf(count_rows, "string")("raw").alias("text"),
+        "embedding",
+    )
+    out = sorted(map(tuple, index(queries).collect()))
+    assert evaluated.value == n_q
+
+    manual = topk_results(
+        rrf_fuse(
+            topk_results(bm25(queries).select("query_id", "idx", "score"), 100),
+            topk_results(
+                ivf(queries).select(
+                    "query_id", F.col("neighbor_id").alias("idx"), "score"
+                ),
+                100,
+            ),
+            c=60.0, k=100,
+        ).withColumnRenamed("rrf", "score").drop("rank"),
+        3,
+    )
+    assert out and out == sorted(map(tuple, manual.collect()))

@@ -23,7 +23,11 @@ from typing import Callable, Iterator, Optional
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from warp_pipes_spark.core.fingerprint import combine_fingerprints, get_fingerprint
+from warp_pipes_spark.core.fingerprint import (
+    combine_fingerprints,
+    fingerprint_dataframe,
+    get_fingerprint,
+)
 from warp_pipes_spark.core.pipe import Pipe
 from warp_pipes_spark.pipes.cache import CacheManager
 
@@ -98,7 +102,9 @@ class Predict(Pipe):
     _no_fingerprint = ("manager", "inner")
 
     def cache_fingerprint(self, df: DataFrame) -> str:
-        input_fp = self.input_fingerprint or str(df.semanticHash())
+        # the content fingerprint, not ``semanticHash``: a plan over a
+        # rewritten source hashes the same, and the hash differs per JVM
+        input_fp = self.input_fingerprint or fingerprint_dataframe(df)
         return combine_fingerprints(self.model_fingerprint, input_fp, self.output_col)
 
     def cache(self, df: DataFrame) -> DataFrame:

@@ -4282,7 +4282,6 @@ def q96_predict_embed(spark, sf):
     (miss -> compute -> store -> join-back) is what the query exercises."""
     import pandas as pd
 
-    from warp_pipes_spark.core.fingerprint import fingerprint_dataframe
     from warp_pipes_spark.pipes.cache import CacheManager
     from warp_pipes_spark.pipes.predict import Predict
 
@@ -4311,7 +4310,6 @@ def q96_predict_embed(spark, sf):
         model_fn,
         manager,
         model_fingerprint="toy_embed_v1",
-        input_fingerprint=fingerprint_dataframe(docs),
         input_col="text",
         output_col="vector",
         id_col="doc_id",

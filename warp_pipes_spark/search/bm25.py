@@ -608,6 +608,9 @@ class Bm25Search(Pipe):
     # (~tens of MB at the cap); larger vocabularies keep the Spark-side
     # join probe. Module-level so tests can monkeypatch the threshold.
     _TERMDF_MAP_MAX_ROWS = 262_144
+    # cap on the query-term rows ``_fan_est`` collects to the driver; a
+    # larger batch keeps the join probe
+    _FAN_EST_COLLECT_MAX_ROWS = 65_536
 
     def _termdf_map(self) -> "dict | None":
         """term -> df as a driver dict, read straight from the termdf
@@ -655,16 +658,29 @@ class Bm25Search(Pipe):
     def _fan_est(self, qterms: DataFrame, stats: DataFrame) -> int:
         """Exact scoring fan-out Σ df(t) over the batch's query-term
         rows — the strategy chooser's input. With the termdf dict
-        available the sum runs driver-side after ONE narrow collect of
-        the term rows (no join, no AQE shuffle stages: 3 jobs -> 1 per
-        batch); otherwise the vocabulary-sized join probe. Identical
-        arithmetic: the inner join drops unindexed terms = .get(t, 0),
-        and duplicate term rows (multi-leg queries) count once per
-        row in both forms."""
+        available the sum runs driver-side after one narrow collect of at
+        most ``_FAN_EST_COLLECT_MAX_ROWS`` (plus one per partition) term
+        rows (no join, no AQE shuffle stages); otherwise, or over that
+        cap, the vocabulary-sized join probe. Identical arithmetic: the
+        inner join drops unindexed terms = .get(t, 0), and duplicate term
+        rows (multi-leg queries) count once per row in both forms."""
         dfmap = self._termdf_map()
         if dfmap is not None:
-            rows = qterms.select("term").collect()
-            return sum(dfmap.get(r[0], 0) for r in rows)
+            # ONE narrow job (a ``limit`` collect scans partitions in
+            # growing rounds, a job each): every partition sends at most
+            # its share of the cap, plus one row marking it as over.
+            # ``pos`` is the row's position within its partition (the low
+            # 33 bits of monotonically_increasing_id)
+            n_parts = max(1, qterms.rdd.getNumPartitions())
+            share = max(1, self._FAN_EST_COLLECT_MAX_ROWS // n_parts)
+            pos = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+            rows = (
+                qterms.select("term", pos.alias("pos"))
+                .where(F.col("pos") <= share)
+                .collect()
+            )
+            if all(r[1] < share for r in rows):
+                return sum(dfmap.get(r[0], 0) for r in rows)
         return qterms.join(stats, "term").agg(F.sum("df")).collect()[0][0] or 0
 
     def _term_stats(self, postings: DataFrame) -> DataFrame:

@@ -60,6 +60,12 @@ class Index(Pipe):
         return combine_fingerprints(*[e.fingerprint for e in self.engines])
 
     def _transform(self, queries: DataFrame, **kwargs) -> DataFrame:
+        # every engine scans the query frame (BM25 alone scans it three
+        # times); a caller's frame is usually an uncached Python source or
+        # UDF, and each Python task costs a fixed worker start-up, so
+        # checkpoint it: the first engine action materializes the batch
+        # once and every later scan reads its blocks
+        queries = queries.localCheckpoint(eager=False)
         prev: Optional[DataFrame] = None
         # k of the trailing TopkSearch (if any): when the chain already ends
         # in a re-rank to <= self.k, the final window would re-sort an
