@@ -267,6 +267,174 @@ def test_cache_failed_publish_recomputes(spark, docs, tmp_path, caplog, monkeypa
     assert _os.listdir(mgr.cache_dir) == []
 
 
+def test_meta_value_memoizes_on_published_artifacts_only(spark, docs, tmp_path):
+    """An index scalar is computed once per published artifact and read
+    from its sidecar meta afterwards; an unpublished artifact keeps no
+    meta, so every call recomputes and nothing is written."""
+    import os as _os
+
+    mgr = CacheManager(str(tmp_path / "meta"))
+    calls = []
+
+    def probe():
+        calls.append(1)
+        return 42
+
+    assert mgr.meta_value("absent", "n", probe) == 42
+    assert mgr.meta_value("absent", "n", probe) == 42
+    assert len(calls) == 2 and _os.listdir(mgr.cache_dir) == []
+    mgr.store(docs, "idx")
+    assert [mgr.meta_value("idx", "n", probe) for _ in range(3)] == [42] * 3
+    assert len(calls) == 3
+
+
+_CORPUS = [
+    (1, "the quick brown fox jumps over the lazy dog"),
+    (2, "the quick brown fox jumped over a lazy dog"),
+    (3, "a slow green turtle crawls under the busy bridge"),
+    (4, "lazy dogs and quick foxes share the brown field"),
+    (5, "the quick brown fox jumps over the lazy dog"),
+]
+_NEW_DOCS = [(6, "a quick turtle jumps over the brown bridge")]
+
+
+def _text_queries(spark):
+    return spark.createDataFrame(
+        [(0, "quick brown fox"), (1, "lazy turtle bridge")],
+        "query_id long, text string",
+    )
+
+
+def _patterns(spark):
+    return spark.createDataFrame(
+        [(0, "quick brown"), (1, "turtle")], "query_id long, pattern string"
+    )
+
+
+def _bm25(spark, docs, new, d):
+    from warp_pipes_spark.search.bm25 import Bm25Search
+
+    return Bm25Search(corpus=docs, k=3, index_cache_dir=d)(_text_queries(spark))
+
+
+def _bm25_append(spark, docs, new, d):
+    from warp_pipes_spark.search.bm25 import Bm25Search
+
+    eng = Bm25Search(corpus=docs, k=3, index_cache_dir=d).append(new)
+    return eng(_text_queries(spark))
+
+
+def _ql(spark, docs, new, d):
+    from warp_pipes_spark.search.ql import DirichletQLSearch
+
+    return DirichletQLSearch(corpus=docs, k=3, index_cache_dir=d)(
+        _text_queries(spark)
+    )
+
+
+def _substring(spark, docs, new, d):
+    from warp_pipes_spark.search.trigram import TrigramSubstringSearch
+
+    return TrigramSubstringSearch(corpus=docs, index_cache_dir=d)(_patterns(spark))
+
+
+def _substring_append(spark, docs, new, d):
+    from warp_pipes_spark.search.trigram import TrigramSubstringSearch
+
+    eng = TrigramSubstringSearch(corpus=docs, index_cache_dir=d).append(new)
+    return eng(_patterns(spark))
+
+
+def _similarity(spark, docs, new, d):
+    from warp_pipes_spark.search.trigram import TrigramSimilaritySearch
+
+    return TrigramSimilaritySearch(corpus=docs, tau=0.2, index_cache_dir=d)(
+        _patterns(spark)
+    )
+
+
+def _boolean(spark, docs, new, d):
+    from warp_pipes_spark.search.boolean import BooleanSearch
+
+    qs = spark.createDataFrame(
+        [(0, ["quick", "fox"], ["jumped"]), (1, ["lazy"], [])],
+        "query_id long, must array<string>, must_not array<string>",
+    )
+    return BooleanSearch(corpus=docs, index_cache_dir=d)(qs)
+
+
+def _phrase(spark, docs, new, d):
+    from warp_pipes_spark.search.phrase import PhraseSearch
+
+    qs = spark.createDataFrame(
+        [(0, "quick brown fox"), (1, "lazy dog")], "query_id long, phrase string"
+    )
+    return PhraseSearch(corpus=docs, index_cache_dir=d)(qs)
+
+
+def _ngram_jaccard(spark, docs, new, d):
+    from warp_pipes_spark.text.dedup import NgramJaccardDedup
+
+    return NgramJaccardDedup(
+        n=3, threshold=0.5, prefix_filter=False, shingle_cache_dir=d
+    )(docs)
+
+
+def _simhash(spark, docs, new, d):
+    from warp_pipes_spark.text.dedup import SimHashDedup
+
+    return SimHashDedup(materialize_signatures=True, signature_cache_dir=d)(docs)
+
+
+@pytest.mark.parametrize(
+    "run",
+    [
+        _bm25,
+        _bm25_append,
+        _ql,
+        _substring,
+        _substring_append,
+        _similarity,
+        _boolean,
+        _phrase,
+        _ngram_jaccard,
+        _simhash,
+    ],
+    ids=lambda f: f.__name__.strip("_"),
+)
+def test_engine_failed_publish_recomputes(spark, tmp_path, caplog, monkeypatch, run):
+    """Every engine artifact (index, shingles, pairs, signatures) keeps
+    the cache contract: a publish that fails costs a recompute, never a
+    read of a path that was not written."""
+    import logging
+    import os as _os
+
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    docs = spark.createDataFrame(_CORPUS, "doc_id long, text string")
+    new = spark.createDataFrame(_NEW_DOCS, "doc_id long, text string")
+    want = sorted(
+        tuple(r) for r in run(spark, docs, new, str(tmp_path / "ok")).collect()
+    )
+    assert want
+
+    orig = DataFrameWriter.parquet
+
+    def flaky(self, path, *args, **kwargs):
+        # only publishes fail: the engine's own reads and writes still work
+        if ".staging-" in path:
+            raise OSError("disk full")
+        return orig(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", flaky)
+    doomed = str(tmp_path / "doomed")
+    with caplog.at_level(logging.WARNING, logger="warp_pipes_spark.pipes.cache"):
+        got = sorted(tuple(r) for r in run(spark, docs, new, doomed).collect())
+    assert got == want
+    assert any("publish failed" in r.message for r in caplog.records)
+    assert _os.listdir(doomed) == []
+
+
 def test_cache_concurrent_writers_race(spark, docs, tmp_path):
     """Two writers publishing the same fingerprint: one atomic rename wins,
     the loser discards its (content-identical) staging dir — no partial

@@ -394,6 +394,63 @@ def test_substring_strategies_match_naive_contains(spark, tmp_path, monkeypatch)
         assert naive.exceptAll(got).count() == 0
 
 
+@pytest.mark.parametrize("engine", ["substring", "similarity", "boolean"])
+def test_dense_mask_broadcast_cap_takes_sparse_plan(
+    spark, tmp_path, monkeypatch, engine
+):
+    """Over ``MAX_QUERY_MASK_BYTES`` (|queries| x ceil(keys/64) longs)
+    each dense-regime engine takes its sparse plan, with identical
+    rows."""
+    from warp_pipes_spark.search import masks
+    from warp_pipes_spark.search.boolean import BooleanSearch
+    from warp_pipes_spark.search.trigram import (
+        TrigramSimilaritySearch,
+        TrigramSubstringSearch,
+    )
+
+    if engine == "substring":
+        # force the fan-out gate; the mask cap is the only thing left
+        monkeypatch.setattr(TrigramSubstringSearch, "_n_docs", lambda self, p: 0)
+        docs = spark.createDataFrame(_subseq_rows(), "doc_id long, text string")
+        qs = spark.createDataFrame(
+            [(0, "abcab"), (1, "bcabca"), (2, "ccaabb")], ["query_id", "pattern"]
+        )
+        eng = TrigramSubstringSearch(
+            corpus=docs, index_cache_dir=str(tmp_path / "trgm")
+        )
+    elif engine == "similarity":
+        # the closed-form dense case of test_trgm_sim_dense_mask_strategy
+        docs = spark.createDataFrame(
+            [(1, "abcd")] + [(10 + i, "xabcx") for i in range(5)],
+            ["doc_id", "text"],
+        )
+        qs = spark.createDataFrame([(9, "abcdefg")], ["query_id", "pattern"])
+        eng = TrigramSimilaritySearch(corpus=docs, tau=0.1, materialize_index=False)
+    else:
+        monkeypatch.setattr(BooleanSearch, "_n_docs", lambda self, p: 0)
+        docs = spark.createDataFrame(
+            [(1, "alpha beta gamma"), (2, "alpha beta"), (3, "beta gamma")],
+            ["doc_id", "text"],
+        )
+        qs = spark.createDataFrame(
+            [(10, ["alpha", "beta"], ["gamma"]), (11, ["beta"], [])],
+            "query_id long, must array<string>, must_not array<string>",
+        )
+        eng = BooleanSearch(corpus=docs, materialize_index=False)
+
+    def plan(df):
+        return df._jdf.queryExecution().analyzed().toString()
+
+    dense = eng(qs)
+    assert "__dm0" in plan(dense)
+    monkeypatch.setattr(masks, "MAX_QUERY_MASK_BYTES", 0)
+    sparse = eng(qs)
+    assert "__dm0" not in plan(sparse)
+    rows = sorted(tuple(r) for r in dense.collect())
+    assert rows
+    assert sorted(tuple(r) for r in sparse.collect()) == rows
+
+
 def test_wildcard_strategies_match_naive_like(spark, tmp_path, monkeypatch):
     """Same differential for WildcardLikeSearch (pooled literal-run
     grams + LIKE verify) under both candidate strategies."""

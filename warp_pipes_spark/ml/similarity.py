@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from warp_pipes_spark.core.pipe import Pipe
+from warp_pipes_spark.pipes.cache import CacheManager
 
 
 def _dot(a, b):
@@ -373,13 +374,16 @@ class LshCosineTopK(Pipe):
         contract as the BM25 postings / IVF lists / PQ codes). Hashing the
         corpus is the per-call expensive pass; the cached table is 3 ints
         per (vector, table) regardless of embedding width."""
-        bucket_udf = self._bucket_udf()
-        ce = ce_src.select(
-            "neighbor_id",
-            F.posexplode(bucket_udf(F.col("cv"))).alias("table_id", "bucket"),
-        )
+        def build() -> DataFrame:
+            return ce_src.select(
+                "neighbor_id",
+                F.posexplode(self._bucket_udf()(F.col("cv"))).alias(
+                    "table_id", "bucket"
+                ),
+            )
+
         if not self.materialize_index:
-            return ce
+            return build()
         import os
         import tempfile
 
@@ -387,7 +391,6 @@ class LshCosineTopK(Pipe):
             fingerprint_dataframe,
             get_fingerprint,
         )
-        from warp_pipes_spark.pipes.cache import CacheManager
 
         manager = CacheManager(
             self.index_cache_dir
@@ -406,10 +409,7 @@ class LshCosineTopK(Pipe):
                 "plane_family": self.plane_family,
             }
         )
-        if not manager.exists(fp):
-            # publish once; this call and later sessions read the artifact
-            return manager.store(ce, fp)
-        return manager.load(self.corpus.sparkSession, fp)
+        return manager.get_or_compute(self.corpus.sparkSession, fp, build)
 
     def _planes(self) -> np.ndarray:
         if self.plane_family == "md5":
@@ -789,7 +789,6 @@ class IvfCosineTopK(Pipe):
             fingerprint_dataframe,
             get_fingerprint,
         )
-        from warp_pipes_spark.pipes.cache import CacheManager
 
         manager = CacheManager(
             self.centroid_cache_dir
@@ -914,19 +913,21 @@ class IvfCosineTopK(Pipe):
         the index-once-query-many contract the BM25 postings and the
         k-means centroids already follow. At cluster scale, write this
         partitioned by ``cell`` so an n_probe query reads only its lists."""
-        c = self.corpus.select(
-            F.col(self.corpus_id).alias("neighbor_id"),
-            F.col(self.corpus_vec).cast("array<double>").alias("cv"),
-        ).withColumn("cn", _norm(F.col("cv")))
-        if self.assign_family == "expr":
-            cell = F.element_at(
-                self._sorted_cells_expr(centroids, F.col("cv")), 1
-            )["cell"]
-        else:
-            cell = self._cell_udf(centroids, 1)(F.col("cv"))[0]
-        ce = c.withColumn("cell", cell)
+        def build() -> DataFrame:
+            c = self.corpus.select(
+                F.col(self.corpus_id).alias("neighbor_id"),
+                F.col(self.corpus_vec).cast("array<double>").alias("cv"),
+            ).withColumn("cn", _norm(F.col("cv")))
+            if self.assign_family == "expr":
+                cell = F.element_at(
+                    self._sorted_cells_expr(centroids, F.col("cv")), 1
+                )["cell"]
+            else:
+                cell = self._cell_udf(centroids, 1)(F.col("cv"))[0]
+            return c.withColumn("cell", cell)
+
         if not self.materialize_index:
-            return ce
+            return build()
         import os
         import tempfile
 
@@ -934,7 +935,6 @@ class IvfCosineTopK(Pipe):
             fingerprint_dataframe,
             get_fingerprint,
         )
-        from warp_pipes_spark.pipes.cache import CacheManager
 
         manager = CacheManager(
             self.index_cache_dir
@@ -953,10 +953,7 @@ class IvfCosineTopK(Pipe):
                 "assign": self.assign_family,
             }
         )
-        if not manager.exists(fp):
-            # publish once; this call and later sessions read the artifact
-            return manager.store(ce, fp)
-        return manager.load(self.corpus.sparkSession, fp)
+        return manager.get_or_compute(self.corpus.sparkSession, fp, build)
 
     def _transform(self, df: DataFrame, **kwargs) -> DataFrame:
         centroids = self._centroids()

@@ -16,6 +16,12 @@ and costs a recompute on the next call, never an error. Loads go
 through ``io.read_parquet``'s per-session memo, keyed on the artifact's
 snapshot token, so a republished artifact is never served stale.
 
+Engines memoize each artifact (index postings, shingle tables, dedup
+pairs, signatures) with one :meth:`CacheManager.get_or_compute` call, so
+the failed-publish contract holds for them too; index-intrinsic scalars
+(corpus stats, posting and document counts) go through
+:meth:`CacheManager.meta_value` on the artifact's sidecar meta.
+
 Completeness: the reference validates its zarr store by scanning for
 all-zero chunks (``caching.py:237-260``); Parquet writes are atomic at the
 job level (output committer), so existence of ``_SUCCESS`` is the
@@ -95,34 +101,30 @@ class CacheManager:
     def load(self, spark: SparkSession, fingerprint: str) -> DataFrame:
         return read_parquet(spark, self.path_for(fingerprint))
 
-    def update_meta(self, fingerprint: str, extra: dict) -> None:
-        """Merge scalar fields into a published artifact's sidecar meta.
-        Used to lazily memoize index-intrinsic statistics (e.g. total
-        posting count) computed by the first query batch, so every later
-        batch skips that probe job. Last-writer-wins on the tiny JSON is
-        safe: all writers compute the same values from the same artifact."""
+    def meta_value(self, fingerprint: str, key: str, compute: Callable[[], object]):
+        """Memoize an index-intrinsic scalar (e.g. total posting count) in
+        the sidecar meta ``store`` writes beside the artifact: the first
+        caller pays ``compute`` (a probe job) and writes the value back,
+        every later call reads the local JSON with zero Spark jobs. An
+        unpublished artifact has no meta to write to, so its value is
+        recomputed. Last-writer-wins on the tiny JSON is safe: all writers
+        compute the same value from the same artifact."""
         path = os.path.join(self.path_for(fingerprint), "_wps_meta.json")
         try:
-            meta = self.read_meta(fingerprint)
-            meta.update(extra)
-            tmp = path + ".tmp"
-            with open(tmp, "w") as f:
+            with open(path) as f:
+                meta = json.load(f)
+        except (OSError, ValueError):
+            meta = {}
+        if meta.get(key) is not None:
+            return meta[key]
+        meta[key] = compute()
+        try:
+            with open(path + ".tmp", "w") as f:
                 json.dump(meta, f)
-            os.replace(tmp, path)
+            os.replace(path + ".tmp", path)
         except OSError:
             pass
-
-    def read_meta(self, fingerprint: str) -> dict:
-        """Driver-side sidecar metadata written by ``store`` — scalar
-        index statistics live here so warm query paths read a tiny local
-        JSON instead of running a Spark probe job."""
-        try:
-            with open(
-                os.path.join(self.path_for(fingerprint), "_wps_meta.json")
-            ) as f:
-                return json.load(f)
-        except Exception:
-            return {}
+        return meta[key]
 
     def store(self, df: DataFrame, fingerprint: str, meta: Optional[dict] = None) -> DataFrame:
         """Publish ``df`` under ``fingerprint`` and return the published

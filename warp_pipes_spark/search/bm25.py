@@ -29,6 +29,7 @@ from pyspark.storagelevel import StorageLevel
 
 from warp_pipes_spark.core.fingerprint import get_fingerprint
 from warp_pipes_spark.core.pipe import Pipe
+from warp_pipes_spark.pipes.cache import CacheManager
 from warp_pipes_spark.text.analysis import tokens_expr, tokens_sql
 
 K1 = 1.2
@@ -226,30 +227,20 @@ class Bm25Search(Pipe):
         I/O pass the incremental append exists to avoid. The scored bake
         still reads every posting row (global idf/avgdl shift), so
         results are unchanged."""
-        from warp_pipes_spark.pipes.cache import CacheManager
-
         if not self.materialize_index:
             return self._postings()
+        spark = self.corpus.sparkSession
         manager = CacheManager(self.index_cache_dir)
         fp_raw = self._tok_fingerprint() + "_raw"
-        if manager.exists(fp_raw):
-            return manager.load(self.corpus.sparkSession, fp_raw)
-        ap = getattr(self, "_append_from", None)
-        if ap is not None:
-            base_eng, new_docs = ap
-            fp_delta = fp_raw + "delta"
-            if not manager.exists(fp_delta):
-                new_raw = type(self)(
-                    corpus=new_docs, **self._ctor_kwargs()
-                )._postings()
-                manager.store(new_raw, fp_delta)
-            return base_eng._raw_postings().unionByName(
-                manager.load(self.corpus.sparkSession, fp_delta)
+        if self._append_from is not None and not manager.exists(fp_raw):
+            base_eng, new_docs = self._append_from
+            delta = manager.get_or_compute(
+                spark,
+                fp_raw + "delta",
+                lambda: type(self)(corpus=new_docs, **self._ctor_kwargs())._postings(),
             )
-        raw = self._postings().persist(StorageLevel.MEMORY_AND_DISK)
-        out = manager.store(raw, fp_raw)
-        raw.unpersist()
-        return out
+            return base_eng._raw_postings().unionByName(delta)
+        return manager.get_or_compute(spark, fp_raw, self._postings)
 
     def _ctor_kwargs(self) -> dict:
         return dict(
@@ -324,8 +315,6 @@ class Bm25Search(Pipe):
         corpus. At cluster scale point ``index_cache_dir`` at shared storage
         and the postings become the written, term-partitioned artifact every
         executor reads locally."""
-        from warp_pipes_spark.pipes.cache import CacheManager
-
         spark = self.corpus.sparkSession
         if not self.materialize_index:
             postings = self._postings()
@@ -337,30 +326,38 @@ class Bm25Search(Pipe):
             return self._champion_cap(self._score_postings(postings))
 
         manager = CacheManager(self.index_cache_dir)
-        fp_post = self._index_fingerprint() + "_postings"
-        if not manager.exists(fp_post):
+        # the stats probe and the bake both read the raw postings: keep
+        # them persisted until the publish has written the bake
+        persisted = []
+
+        def bake() -> DataFrame:
             # raw postings come from their own tokenization-keyed cache
             # (parquet-backed), so re-baking scores — e.g. after an append
             # shifted idf, or under different k1/b — never re-tokenizes
             postings = self._raw_postings().persist(StorageLevel.MEMORY_AND_DISK)
+            persisted.append(postings)
             # corpus stats as literals: memoized in the raw artifact's
             # sidecar meta, so every re-bake over the same tokenization
             # (appends re-key; k1/b/champion re-configs don't) skips the
             # doc-level distinct pass AND the bake plan loses the stats
             # crossJoin subtree
-            fp_raw = self._tok_fingerprint() + "_raw"
-            stats = manager.read_meta(fp_raw).get("stats")
-            if stats is None:
-                stats = self._corpus_stats(postings)
-                if manager.exists(fp_raw):
-                    manager.update_meta(fp_raw, {"stats": stats})
-            scored = self._champion_cap(self._score_postings(postings, stats=stats))
+            stats = manager.meta_value(
+                self._tok_fingerprint() + "_raw",
+                "stats",
+                lambda: self._corpus_stats(postings),
+            )
             # no repartition on write: the query join broadcasts the query
             # terms and STREAMS the postings, so postings-side co-location
             # buys nothing — writing map-side output avoids a full shuffle
-            manager.store(scored, fp_post)
-            postings.unpersist()
-        return manager.load(spark, fp_post)
+            return self._champion_cap(self._score_postings(postings, stats=stats))
+
+        try:
+            return manager.get_or_compute(
+                spark, self._index_fingerprint() + "_postings", bake
+            )
+        finally:
+            for postings in persisted:
+                postings.unpersist()
 
     def _champion_cap(self, scored: DataFrame) -> DataFrame:
         """Per-term champion list: top-``champion_size`` postings by baked
@@ -563,25 +560,26 @@ class Bm25Search(Pipe):
         decimal cast must happen at query time, after the weight multiply
         — identical to `_scored`'s expression (weight 1.0 multiplies
         exactly, so the plain path is unchanged)."""
-        from warp_pipes_spark.pipes.cache import CacheManager
-
         C = max(self.k, 16)
-        scored = postings.select("term", "doc_id", "score_d")
-        wc = Window.partitionBy("term").orderBy(
-            F.desc("score_d"), F.asc("doc_id")
+
+        def build() -> DataFrame:
+            wc = Window.partitionBy("term").orderBy(
+                F.desc("score_d"), F.asc("doc_id")
+            )
+            return (
+                postings.select("term", "doc_id", "score_d")
+                .withColumn("__cr", F.row_number().over(wc))
+                .filter(F.col("__cr") <= C)
+                .drop("__cr")
+            )
+
+        if not self.materialize_index:
+            return build()
+        return CacheManager(self.index_cache_dir).get_or_compute(
+            self.corpus.sparkSession,
+            self._index_fingerprint() + f"_seedv2_{C}",
+            build,
         )
-        seed = (
-            scored.withColumn("__cr", F.row_number().over(wc))
-            .filter(F.col("__cr") <= C)
-            .drop("__cr")
-        )
-        if self.materialize_index:
-            manager = CacheManager(self.index_cache_dir)
-            fp_seed = self._index_fingerprint() + f"_seedv2_{C}"
-            if not manager.exists(fp_seed):
-                manager.store(seed, fp_seed)
-            seed = manager.load(self.corpus.sparkSession, fp_seed)
-        return seed
 
     def _n_postings(self, stats: DataFrame) -> int:
         """Total posting count ``sum(df)`` — an index-intrinsic scalar the
@@ -590,19 +588,14 @@ class Bm25Search(Pipe):
         index pays the one-row probe job and writes the scalar back; every
         later batch (and every other engine sharing the index) reads the
         local JSON with zero Spark jobs."""
-        from warp_pipes_spark.pipes.cache import CacheManager
+        def probe() -> int:
+            return int(stats.agg(F.sum("df")).collect()[0][0] or 0)
 
-        manager = fp = None
-        if self.materialize_index:
-            manager = CacheManager(self.index_cache_dir)
-            fp = self._index_fingerprint() + "_termdf"
-            cached = manager.read_meta(fp).get("n_postings")
-            if cached is not None:
-                return cached
-        n = stats.agg(F.sum("df")).collect()[0][0] or 0
-        if manager is not None:
-            manager.update_meta(fp, {"n_postings": int(n)})
-        return int(n)
+        if not self.materialize_index:
+            return probe()
+        return CacheManager(self.index_cache_dir).meta_value(
+            self._index_fingerprint() + "_termdf", "n_postings", probe
+        )
 
     # vocabulary cap for holding the termdf table as a driver dict
     # (~tens of MB at the cap); larger vocabularies keep the Spark-side
@@ -622,7 +615,6 @@ class Bm25Search(Pipe):
         if not self.materialize_index:
             return None
         from warp_pipes_spark.io import memo_on_snapshot
-        from warp_pipes_spark.pipes.cache import CacheManager
 
         manager = CacheManager(self.index_cache_dir)
         fp = self._index_fingerprint() + "_termdf"
@@ -689,20 +681,18 @@ class Bm25Search(Pipe):
         term-major and doc-major physical strategies. Parquet-cached beside
         the index (one aggregation pass at build, scalar-sized reads per
         query batch)."""
-        from warp_pipes_spark.pipes.cache import CacheManager
+        def build() -> DataFrame:
+            return (
+                postings.where(F.col("term").isNotNull())
+                .groupBy("term")
+                .agg(F.count(F.lit(1)).alias("df"))
+            )
 
-        stats = (
-            postings.where(F.col("term").isNotNull())
-            .groupBy("term")
-            .agg(F.count(F.lit(1)).alias("df"))
+        if not self.materialize_index:
+            return build()
+        return CacheManager(self.index_cache_dir).get_or_compute(
+            self.corpus.sparkSession, self._index_fingerprint() + "_termdf", build
         )
-        if self.materialize_index:
-            manager = CacheManager(self.index_cache_dir)
-            fp = self._index_fingerprint() + "_termdf"
-            if not manager.exists(fp):
-                manager.store(stats, fp)
-            stats = manager.load(self.corpus.sparkSession, fp)
-        return stats
 
     def _transform_maxscore(self, df: DataFrame, postings: DataFrame) -> DataFrame:
         """Top-k retrieval with champion-seeded threshold pruning — the

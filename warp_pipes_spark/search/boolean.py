@@ -53,6 +53,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from warp_pipes_spark.core.pipe import Pipe
+from warp_pipes_spark.pipes.cache import CacheManager
+from warp_pipes_spark.search.masks import query_masks_fit
 
 
 def boolean_cache_dir() -> str:
@@ -123,62 +125,47 @@ class BooleanSearch(Pipe):
         explode — no corpus-sized distinct shuffle)."""
         from warp_pipes_spark.text.analysis import tokens_expr
 
-        built = self.corpus.select(
-            F.col(self.corpus_id).alias("doc_id"),
-            F.explode(
-                F.array_distinct(tokens_expr(F.col(self.corpus_text)))
-            ).alias("term"),
-        )
-        if not self.materialize_index:
-            return built
-        from warp_pipes_spark.pipes.cache import CacheManager
-
-        manager = CacheManager(self.index_cache_dir)
-        fp = self._index_fingerprint()
-        if not manager.exists(fp):
-            manager.store(
-                built.repartitionByRange("term").sortWithinPartitions(
-                    "term"
-                ),
-                fp,
+        def build() -> DataFrame:
+            return self.corpus.select(
+                F.col(self.corpus_id).alias("doc_id"),
+                F.explode(
+                    F.array_distinct(tokens_expr(F.col(self.corpus_text)))
+                ).alias("term"),
             )
-        return manager.load(self.corpus.sparkSession, fp)
+
+        if not self.materialize_index:
+            return build()
+        return CacheManager(self.index_cache_dir).get_or_compute(
+            self.corpus.sparkSession,
+            self._index_fingerprint(),
+            lambda: build().repartitionByRange("term").sortWithinPartitions("term"),
+        )
 
     def _term_stats(self, posting: DataFrame) -> DataFrame:
         """(term, __df) document frequencies — the vocabulary-sized table
         the strategy chooser's exact fan-out sum reads; cached under the
         corpus fingerprint (the BM25 ``_termdf`` convention)."""
-        built = posting.groupBy("term").agg(
-            F.count(F.lit(1)).alias("__df")
-        )
-        if not self.materialize_index:
-            return built
-        from warp_pipes_spark.pipes.cache import CacheManager
+        def build() -> DataFrame:
+            return posting.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
 
-        manager = CacheManager(self.index_cache_dir)
-        fp = self._index_fingerprint() + "_termdf"
-        if not manager.exists(fp):
-            manager.store(built, fp)
-        return manager.load(self.corpus.sparkSession, fp)
+        if not self.materialize_index:
+            return build()
+        return CacheManager(self.index_cache_dir).get_or_compute(
+            self.corpus.sparkSession, self._index_fingerprint() + "_termdf", build
+        )
 
     def _n_docs(self, posting: DataFrame) -> int:
         """|distinct indexed docs| — the dense plan's pair-count factor.
         Index-intrinsic, so the first batch pays the probe job and
-        memoizes the scalar in the termdf artifact's sidecar meta (the
-        BM25 ``_n_postings`` convention)."""
-        manager = fp = None
-        if self.materialize_index:
-            from warp_pipes_spark.pipes.cache import CacheManager
+        memoizes the scalar in the termdf artifact's sidecar meta."""
+        def probe() -> int:
+            return posting.select("doc_id").distinct().count()
 
-            manager = CacheManager(self.index_cache_dir)
-            fp = self._index_fingerprint() + "_termdf"
-            cached = manager.read_meta(fp).get("n_docs")
-            if cached is not None:
-                return cached
-        n = posting.select("doc_id").distinct().count()
-        if manager is not None and manager.exists(fp):
-            manager.update_meta(fp, {"n_docs": int(n)})
-        return int(n)
+        if not self.materialize_index:
+            return probe()
+        return CacheManager(self.index_cache_dir).meta_value(
+            self._index_fingerprint() + "_termdf", "n_docs", probe
+        )
 
     def _transform(self, df: DataFrame, **kwargs) -> DataFrame:
         q = df.select(
@@ -261,6 +248,8 @@ class BooleanSearch(Pipe):
         dense = (
             bounded
             and batch_terms
+            # two masks per query: must and must_not
+            and query_masks_fit(2 * row["n_q"], batch_terms)
             and (row["fan_est"] or 0) > row["n_q"] * self._n_docs(posting)
         )
         if bounded and batch_terms:

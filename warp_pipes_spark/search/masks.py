@@ -7,7 +7,9 @@ via ONE bounded pass over the literal-IN-pruned posting, and set
 predicates (intersection size, subset, disjointness) become per-row
 bitwise ops over a broadcast pair enumeration — replacing corpus-sized
 join fan-out aggregates on dense (near-uniform document-frequency)
-corpora where almost every (query, doc) pair shares a key.
+corpora where almost every (query, doc) pair shares a key. The
+broadcast query-mask table grows with the batch, so the dense plans are
+taken only while it fits ``MAX_QUERY_MASK_BYTES``.
 """
 
 from __future__ import annotations
@@ -31,6 +33,17 @@ def bit_rows(values: list) -> list:
 
 def n_buckets(values: list) -> int:
     return (len(values) + 63) // 64
+
+
+# cap on the broadcast query-mask table, |queries| x ceil(keys/64) longs:
+# a batch of 4096 keys (64 longs a mask) admits 131,072 query masks
+MAX_QUERY_MASK_BYTES = 64 << 20
+
+
+def query_masks_fit(n_queries: int, keys: list) -> bool:
+    """Whether a batch's packed query masks stay within
+    ``MAX_QUERY_MASK_BYTES``; over it the engines take their sparse plan."""
+    return n_queries * n_buckets(keys) * 8 <= MAX_QUERY_MASK_BYTES
 
 
 def mask_aggs(nb: int, prefix: str, when: Column | None = None) -> list:

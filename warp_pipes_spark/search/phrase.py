@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from warp_pipes_spark.core.pipe import Pipe
+from warp_pipes_spark.pipes.cache import CacheManager
 
 
 def phrase_cache_dir() -> str:
@@ -106,42 +107,35 @@ class PhraseSearch(Pipe):
         corpus fingerprint, range-clustered by term."""
         from warp_pipes_spark.text.analysis import tokens_expr
 
-        built = self.corpus.select(
-            F.col(self.corpus_id).alias("doc_id"),
-            F.posexplode(tokens_expr(F.col(self.corpus_text))).alias(
-                "pos", "term"
-            ),
-        )
-        if not self.materialize_index:
-            return built
-        from warp_pipes_spark.pipes.cache import CacheManager
-
-        manager = CacheManager(self.index_cache_dir)
-        fp = self._index_fingerprint()
-        if not manager.exists(fp):
-            manager.store(
-                built.repartitionByRange("term").sortWithinPartitions(
-                    "term"
+        def build() -> DataFrame:
+            return self.corpus.select(
+                F.col(self.corpus_id).alias("doc_id"),
+                F.posexplode(tokens_expr(F.col(self.corpus_text))).alias(
+                    "pos", "term"
                 ),
-                fp,
             )
-        return manager.load(self.corpus.sparkSession, fp)
+
+        if not self.materialize_index:
+            return build()
+        return CacheManager(self.index_cache_dir).get_or_compute(
+            self.corpus.sparkSession,
+            self._index_fingerprint(),
+            lambda: build().repartitionByRange("term").sortWithinPartitions("term"),
+        )
 
     def _term_df(self, posting: DataFrame) -> DataFrame:
         """term -> document-position frequency (vocabulary-sized), the
         stats table the rarest-term candidate selection reads; derived
         from the posting once and cached under the same corpus
         fingerprint (the ``search/trigram.py`` ``_gram_df`` convention)."""
-        built = posting.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
-        if not self.materialize_index:
-            return built
-        from warp_pipes_spark.pipes.cache import CacheManager
+        def build() -> DataFrame:
+            return posting.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
 
-        manager = CacheManager(self.index_cache_dir)
-        fp = self._index_fingerprint() + "_df"
-        if not manager.exists(fp):
-            manager.store(built, fp)
-        return manager.load(self.corpus.sparkSession, fp)
+        if not self.materialize_index:
+            return build()
+        return CacheManager(self.index_cache_dir).get_or_compute(
+            self.corpus.sparkSession, self._index_fingerprint() + "_df", build
+        )
 
     def _transform(self, df: DataFrame, **kwargs) -> DataFrame:
         from warp_pipes_spark.text.analysis import tokens_expr

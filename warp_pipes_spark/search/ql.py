@@ -49,6 +49,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from warp_pipes_spark.core.pipe import Pipe
+from warp_pipes_spark.pipes.cache import CacheManager
 from warp_pipes_spark.search.bm25 import Bm25Search, _default_index_cache_dir
 from warp_pipes_spark.text.analysis import tokens_expr, tokens_sql
 
@@ -129,77 +130,74 @@ class DirichletQLSearch(Pipe):
         then ONE broadcast join + aggregate — no vocabulary join rides
         the fan-out (measured: the query-time cf join cost ~8x the whole
         BM25 pass at sf1). Fingerprint-cached next to the BM25 index."""
-        from warp_pipes_spark.pipes.cache import CacheManager
-
-        spark = self.corpus.sparkSession
         mu = self.mu
-        manager = CacheManager(
-            self.index_cache_dir or _default_index_cache_dir()
-        )
-        fp = self._ql_fingerprint() + "_postings"
-        if self.materialize_index and manager.exists(fp):
-            return manager.load(spark, fp)
-        raw = self._bm()._raw_postings()  # (term, doc_id, dl, tf)
-        cf = (
-            raw.where(F.col("term").isNotNull())
-            .groupBy("term")
-            .agg(F.sum("tf").alias("cf"))
-        )
-        tot = cf.agg(F.sum("cf").alias("t_coll"))
-        arg = (
-            (
-                F.lit(mu) * F.col("cf") + F.col("tf") * F.col("t_coll")
-            ).cast("double")
-            / (F.lit(mu) * F.col("cf")).cast("double")
-        )
-        ts = (F.log(arg).cast("decimal(18,6)") * F.lit(1000000)).cast("long")
-        norm = (
-            F.log(
-                F.lit(mu).cast("double")
-                / (F.col("dl") + F.lit(mu)).cast("double")
-            ).cast("decimal(18,6)")
-            * F.lit(1000000)
-        ).cast("long")
-        scored = (
-            raw.where(F.col("term").isNotNull())
-            .join(cf, "term")
-            .crossJoin(F.broadcast(tot))
-            .select(
-                "term",
-                "doc_id",
-                "dl",
-                ts.alias("ts"),
-                norm.alias("norm"),
+
+        def bake() -> DataFrame:
+            raw = self._bm()._raw_postings()  # (term, doc_id, dl, tf)
+            cf = (
+                raw.where(F.col("term").isNotNull())
+                .groupBy("term")
+                .agg(F.sum("tf").alias("cf"))
             )
-        )
+            tot = cf.agg(F.sum("cf").alias("t_coll"))
+            arg = (
+                (
+                    F.lit(mu) * F.col("cf") + F.col("tf") * F.col("t_coll")
+                ).cast("double")
+                / (F.lit(mu) * F.col("cf")).cast("double")
+            )
+            ts = (F.log(arg).cast("decimal(18,6)") * F.lit(1000000)).cast("long")
+            norm = (
+                F.log(
+                    F.lit(mu).cast("double")
+                    / (F.col("dl") + F.lit(mu)).cast("double")
+                ).cast("decimal(18,6)")
+                * F.lit(1000000)
+            ).cast("long")
+            return (
+                raw.where(F.col("term").isNotNull())
+                .join(cf, "term")
+                .crossJoin(F.broadcast(tot))
+                .select(
+                    "term",
+                    "doc_id",
+                    "dl",
+                    ts.alias("ts"),
+                    norm.alias("norm"),
+                )
+            )
+
         if not self.materialize_index:
-            return scored
-        return manager.store(scored, fp)
+            return bake()
+        return CacheManager(
+            self.index_cache_dir or _default_index_cache_dir()
+        ).get_or_compute(
+            self.corpus.sparkSession, self._ql_fingerprint() + "_postings", bake
+        )
 
     def _seed_table(self, scored: DataFrame) -> DataFrame:
         """Per-term champion lists for the threshold prune: top
         ``C = max(k, 16)`` postings per term by matched contribution
         (doc_id tiebreak), carrying the doc norm. Parquet-cached."""
-        from warp_pipes_spark.pipes.cache import CacheManager
-
         C = max(self.k, 16)
-        wc = Window.partitionBy("term").orderBy(
-            F.desc("ts"), F.asc("doc_id")
-        )
-        seed = (
-            scored.withColumn("__cr", F.row_number().over(wc))
-            .filter(F.col("__cr") <= C)
-            .drop("__cr", "dl")
-        )
-        if self.materialize_index:
-            manager = CacheManager(
-                self.index_cache_dir or _default_index_cache_dir()
+
+        def build() -> DataFrame:
+            wc = Window.partitionBy("term").orderBy(
+                F.desc("ts"), F.asc("doc_id")
             )
-            fp = self._ql_fingerprint() + f"_seed_{C}"
-            if not manager.exists(fp):
-                manager.store(seed, fp)
-            seed = manager.load(self.corpus.sparkSession, fp)
-        return seed
+            return (
+                scored.withColumn("__cr", F.row_number().over(wc))
+                .filter(F.col("__cr") <= C)
+                .drop("__cr", "dl")
+            )
+
+        if not self.materialize_index:
+            return build()
+        return CacheManager(
+            self.index_cache_dir or _default_index_cache_dir()
+        ).get_or_compute(
+            self.corpus.sparkSession, self._ql_fingerprint() + f"_seed_{C}", build
+        )
 
     def _transform(self, df: DataFrame, **kwargs) -> DataFrame:
         scored = self._scored_postings()

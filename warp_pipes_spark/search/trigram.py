@@ -51,6 +51,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from warp_pipes_spark.core.pipe import Pipe
+from warp_pipes_spark.pipes.cache import CacheManager
+from warp_pipes_spark.search.masks import query_masks_fit
 
 
 def trigram_cache_dir() -> str:
@@ -244,9 +246,17 @@ class TrigramSubstringSearch(Pipe):
         101.9 s with it). Materialized once per corpus fingerprint,
         range-partitioned + sorted by gram so literal gram predicates
         prune row groups on every later read."""
+        def explode(docs: DataFrame) -> DataFrame:
+            return docs.select(
+                F.col(self.corpus_id).alias("doc_id"),
+                F.explode(grams_udf()(F.col(self.corpus_text))).alias("gram"),
+            )
+
+        def clustered(docs: DataFrame) -> DataFrame:
+            return explode(docs).repartitionByRange("gram").sortWithinPartitions("gram")
+
         # getattr: TrigramSimilaritySearch borrows this method without
         # inheriting the class attribute
-        g = grams_udf()
         if getattr(self, "_append_from", None) is not None:
             # append pays ONLY its delta: the base engine's posting (its
             # already-gram-clustered artifact when materialized) is
@@ -260,82 +270,52 @@ class TrigramSubstringSearch(Pipe):
             # through the Union into BOTH clustered scans, so row-group
             # pruning is preserved on each side.
             base_eng, delta = self._append_from
-            delta_built = delta.select(
-                F.col(self.corpus_id).alias("doc_id"),
-                F.explode(g(F.col(self.corpus_text))).alias("gram"),
-            )
             if not self.materialize_index:
-                return base_eng._posting().unionByName(delta_built)
-            from warp_pipes_spark.pipes.cache import CacheManager
-
-            manager = CacheManager(self.index_cache_dir)
-            fp = self._index_fingerprint() + "_delta"
-            if not manager.exists(fp):
-                # delta-sized shuffle: cluster just the new rows by gram
-                manager.store(
-                    delta_built.repartitionByRange(
-                        "gram"
-                    ).sortWithinPartitions("gram"),
-                    fp,
-                )
-            return base_eng._posting().unionByName(
-                manager.load(self.corpus.sparkSession, fp)
+                return base_eng._posting().unionByName(explode(delta))
+            # delta-sized shuffle: cluster just the new rows by gram
+            delta_posting = CacheManager(self.index_cache_dir).get_or_compute(
+                self.corpus.sparkSession,
+                self._index_fingerprint() + "_delta",
+                lambda: clustered(delta),
             )
-        built = self.corpus.select(
-            F.col(self.corpus_id).alias("doc_id"),
-            F.explode(g(F.col(self.corpus_text))).alias("gram"),
-        )
+            return base_eng._posting().unionByName(delta_posting)
         if not self.materialize_index:
-            return built
-        from warp_pipes_spark.pipes.cache import CacheManager
-
-        manager = CacheManager(self.index_cache_dir)
-        fp = self._index_fingerprint()
-        if not manager.exists(fp):
-            # one-time corpus-sized shuffle to gram-cluster the index
-            # files; every later batch reads back a pruned slice
-            manager.store(
-                built.repartitionByRange("gram").sortWithinPartitions(
-                    "gram"
-                ),
-                fp,
-            )
-        return manager.load(self.corpus.sparkSession, fp)
+            return explode(self.corpus)
+        # one-time corpus-sized shuffle to gram-cluster the index files;
+        # every later batch reads back a pruned slice
+        return CacheManager(self.index_cache_dir).get_or_compute(
+            self.corpus.sparkSession,
+            self._index_fingerprint(),
+            lambda: clustered(self.corpus),
+        )
 
     def _gram_df(self, posting: DataFrame) -> DataFrame:
         """gram -> document frequency stats (vocabulary-sized), derived
         from the materialized posting and cached under the same corpus
         fingerprint — the rarest-gram prune reads this, never the
         corpus."""
-        from warp_pipes_spark.pipes.cache import CacheManager
+        def build() -> DataFrame:
+            return posting.groupBy("gram").agg(F.count(F.lit(1)).alias("__df"))
 
-        built = posting.groupBy("gram").agg(F.count(F.lit(1)).alias("__df"))
         if not self.materialize_index:
-            return built
-        manager = CacheManager(self.index_cache_dir)
-        fp = self._index_fingerprint() + "_df"
-        if not manager.exists(fp):
-            manager.store(built, fp)
-        return manager.load(self.corpus.sparkSession, fp)
+            return build()
+        return CacheManager(self.index_cache_dir).get_or_compute(
+            self.corpus.sparkSession, self._index_fingerprint() + "_df", build
+        )
 
     def _n_docs(self, posting: DataFrame) -> int:
         """|distinct indexed docs| — the dense-regime pair-count factor.
         Index-intrinsic, so the first batch pays the probe job and
-        memoizes the scalar in the gram-df artifact's sidecar meta (the
-        BM25 ``_n_postings`` / BooleanSearch ``_n_docs`` convention)."""
-        manager = fp = None
-        if self.materialize_index:
-            from warp_pipes_spark.pipes.cache import CacheManager
+        memoizes the scalar in the gram-df artifact's sidecar meta."""
 
-            manager = CacheManager(self.index_cache_dir)
-            fp = self._index_fingerprint() + "_df"
-            cached = manager.read_meta(fp).get("n_docs")
-            if cached is not None:
-                return cached
-        n = posting.select("doc_id").distinct().count()
-        if manager is not None and manager.exists(fp):
-            manager.update_meta(fp, {"n_docs": int(n)})
-        return int(n)
+        def probe() -> int:
+            return posting.select("doc_id").distinct().count()
+
+        if not self.materialize_index:
+            return probe()
+        return CacheManager(self.index_cache_dir).meta_value(
+            self._index_fingerprint() + "_df", "n_docs", probe
+        )
 
     def _transform(self, df: DataFrame, **kwargs) -> DataFrame:
         qg = df.select(
@@ -454,6 +434,7 @@ class TrigramSubstringSearch(Pipe):
         dense = (
             bounded
             and grams
+            and query_masks_fit(plan_row["n_q"], grams)
             and (plan_row["__fan"] or 0) * self._DENSE_FAN_WEIGHT
             > plan_row["n_q"] * self._n_docs(posting)
         )
@@ -624,18 +605,16 @@ class TrigramSimilaritySearch(Pipe):
         """doc_id -> distinct-trigram count, derived from the posting
         (already per-doc distinct) and cached under the corpus
         fingerprint like the gram-df stats table."""
-        from warp_pipes_spark.pipes.cache import CacheManager
+        def build() -> DataFrame:
+            return posting.groupBy("doc_id").agg(
+                F.count(F.lit(1)).alias("__nd")
+            )
 
-        built = posting.groupBy("doc_id").agg(
-            F.count(F.lit(1)).alias("__nd")
-        )
         if not self.materialize_index:
-            return built
-        manager = CacheManager(self.index_cache_dir)
-        fp = self._index_fingerprint() + "_ndoc"
-        if not manager.exists(fp):
-            manager.store(built, fp)
-        return manager.load(self.corpus.sparkSession, fp)
+            return build()
+        return CacheManager(self.index_cache_dir).get_or_compute(
+            self.corpus.sparkSession, self._index_fingerprint() + "_ndoc", build
+        )
 
     def _transform(self, df: DataFrame, **kwargs) -> DataFrame:
         import math
@@ -701,6 +680,7 @@ class TrigramSimilaritySearch(Pipe):
         dense = (
             bounded
             and grams
+            and query_masks_fit(row["n_q"], grams)
             and (row["fan_est"] or 0) > row["n_q"] * row["n_docs"]
         )
         if dense:

@@ -30,6 +30,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from warp_pipes_spark.core.pipe import Pipe
+from warp_pipes_spark.pipes.cache import CacheManager
 from warp_pipes_spark.text.analysis import (
     TOKEN_SPLIT_RE,
     ascii_lower_py,
@@ -151,19 +152,20 @@ def shingle_table(
     pairs all reuse the same artifact, mirroring the BM25 index-once-
     query-many design. At cluster scale point ``cache_dir`` at shared
     storage. ``materialize=False`` returns the raw plan (callers persist)."""
-    built = widen_partitions(
-        df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
-    ).select(
-        "doc_id",
-        shingles_udf(n)(F.col(text_col)).alias("shingles"),
-    )
+    def build() -> DataFrame:
+        return widen_partitions(
+            df.select(F.col(id_col).alias("doc_id"), F.col(text_col))
+        ).select(
+            "doc_id",
+            shingles_udf(n)(F.col(text_col)).alias("shingles"),
+        )
+
     if not materialize:
-        return built
+        return build()
     from warp_pipes_spark.core.fingerprint import (
         fingerprint_dataframe,
         get_fingerprint,
     )
-    from warp_pipes_spark.pipes.cache import CacheManager
 
     manager = CacheManager(cache_dir or _default_shingle_cache_dir())
     fp = get_fingerprint(
@@ -175,9 +177,7 @@ def shingle_table(
             "n": n,
         }
     )
-    if not manager.exists(fp):
-        manager.store(built, fp)
-    return manager.load(df.sparkSession, fp)
+    return manager.get_or_compute(df.sparkSession, fp, build)
 
 
 class ExactDedup(Pipe):
@@ -241,7 +241,6 @@ class NgramJaccardDedup(Pipe):
         persist: bool = True,
         materialize_shingles: bool = True,
         shingle_cache_dir: Optional[str] = None,
-        cache_pairs: bool = True,
         **kwargs,
     ):
         super().__init__(**kwargs)
@@ -254,11 +253,47 @@ class NgramJaccardDedup(Pipe):
         self.persist = persist
         self.materialize_shingles = materialize_shingles
         self.shingle_cache_dir = shingle_cache_dir
-        self.cache_pairs = cache_pairs
 
     _no_fingerprint = ("shingle_cache_dir",)
 
     def _transform(self, df: DataFrame, **kwargs) -> DataFrame:
+        if self.prefix_filter:
+            # the prefix path returns its live plan so the path-equality
+            # tests keep comparing two real computations
+            return self._pairs(df)
+        # Fingerprint-keyed Parquet cache of the PAIR TABLE itself, the
+        # same index-once-query-many design as shingle_table and the BM25
+        # postings artifact: the exact near-dup pair set feeds cluster
+        # formation (DedupClusters/q55), sketch audits (MinHashEstimate/
+        # q137) and funnels — each previously re-ran the full
+        # sum(df^2)-cost candidate join. Keyed by corpus content + measure
+        # params only (NOT prefix_filter: both paths produce the identical
+        # pair set — asserted in tests — so either fills the other's
+        # cache).
+        from warp_pipes_spark.core.fingerprint import (
+            fingerprint_dataframe,
+            get_fingerprint,
+        )
+
+        manager = CacheManager(
+            self.shingle_cache_dir or _default_shingle_cache_dir()
+        )
+        fp = get_fingerprint(
+            {
+                "op": "ngram_jaccard_pairs_v1",
+                "corpus": fingerprint_dataframe(df),
+                "id": self.id_col,
+                "text": self.text_col,
+                "n": self.n,
+                "threshold": self.threshold,
+                "max_df": self.max_df,
+            }
+        )
+        return manager.get_or_compute(
+            df.sparkSession, fp, lambda: self._pairs(df)
+        )
+
+    def _pairs(self, df: DataFrame) -> DataFrame:
         docs = shingle_table(
             df,
             self.n,
@@ -350,42 +385,7 @@ class NgramJaccardDedup(Pipe):
             )
             .select("doc_a", "doc_b")
         )
-        out = self._verify_pairs(cand, verify_docs, sizes)
-        if not self.cache_pairs:
-            return out
-        # Fingerprint-keyed Parquet cache of the PAIR TABLE itself, the
-        # same index-once-query-many design as shingle_table and the BM25
-        # postings artifact: the exact near-dup pair set feeds cluster
-        # formation (DedupClusters/q55), sketch audits (MinHashEstimate/
-        # q137) and funnels — each previously re-ran the full
-        # sum(df^2)-cost candidate join. Keyed by corpus content + measure
-        # params only (NOT prefix_filter: both paths produce the identical
-        # pair set — asserted in tests — so either fills the other's
-        # cache). The prefix path returns its live plan above so the
-        # path-equality tests keep comparing two real computations.
-        from warp_pipes_spark.core.fingerprint import (
-            fingerprint_dataframe,
-            get_fingerprint,
-        )
-        from warp_pipes_spark.pipes.cache import CacheManager
-
-        manager = CacheManager(
-            self.shingle_cache_dir or _default_shingle_cache_dir()
-        )
-        fp = get_fingerprint(
-            {
-                "op": "ngram_jaccard_pairs_v1",
-                "corpus": fingerprint_dataframe(df),
-                "id": self.id_col,
-                "text": self.text_col,
-                "n": self.n,
-                "threshold": self.threshold,
-                "max_df": self.max_df,
-            }
-        )
-        if not manager.exists(fp):
-            manager.store(out, fp)
-        return manager.load(df.sparkSession, fp)
+        return self._verify_pairs(cand, verify_docs, sizes)
 
     def _candidates_prefix(self, inv: DataFrame, sizes: DataFrame) -> DataFrame:
         """AllPairs/PPJoin prefix filtering (exact): under a global
@@ -1099,7 +1099,6 @@ class SimHashDedup(Pipe):
                 fingerprint_dataframe,
                 get_fingerprint,
             )
-            from warp_pipes_spark.pipes.cache import CacheManager
 
             manager = CacheManager(
                 self.signature_cache_dir
@@ -1115,9 +1114,9 @@ class SimHashDedup(Pipe):
                     "hash_family": self.hash_family,
                 }
             )
-            if not manager.exists(fp):
-                manager.store(self._signatures(df), fp)
-            sig = manager.load(df.sparkSession, fp)
+            sig = manager.get_or_compute(
+                df.sparkSession, fp, lambda: self._signatures(df)
+            )
         else:
             sig = self._signatures(df)
             if self.persist:
@@ -1223,14 +1222,13 @@ class DedupClusters(Pipe):
     each round every node takes the min of its own label, its neighbors'
     labels, AND its current label's label (path doubling), so label
     distance to the component min roughly halves-then-propagates per
-    round: O(log diameter) rounds even on adversarially long chains
-    (``shortcut=False`` reverts to plain one-hop propagation =
-    O(diameter)). Labels start at the one-hop minimum (node vs its
+    round: O(log diameter) rounds even on adversarially long chains.
+    Labels start at the one-hop minimum (node vs its
     neighbors), so star/clique components finish in the first check.
     Per round: two joins + one groupBy (all on the node key) and a 1-row
     aggregate convergence probe (labels only ever DECREASE, so an unchanged
     label sum is exactly the fixpoint — no join-based diff needed);
-    ``localCheckpoint`` every ``checkpoint_every`` rounds truncates the
+    ``localCheckpoint`` every ``_CHECKPOINT_EVERY`` rounds truncates the
     growing lineage. Duplicate graphs are overwhelmingly tiny cliques/
     chains (diameter 1-3), so rounds stay in single digits even at 100 TB.
 
@@ -1250,8 +1248,6 @@ class DedupClusters(Pipe):
         src_col: str = "doc_a",
         dst_col: str = "doc_b",
         max_iters: int = 20,
-        checkpoint_every: int = 5,
-        shortcut: bool = True,
         local_threshold: int = 4_000_000,
         **kwargs,
     ):
@@ -1259,9 +1255,10 @@ class DedupClusters(Pipe):
         self.src_col = src_col
         self.dst_col = dst_col
         self.max_iters = max_iters
-        self.checkpoint_every = checkpoint_every
-        self.shortcut = shortcut
         self.local_threshold = local_threshold
+
+    # rounds between lineage truncations of the iterative path
+    _CHECKPOINT_EVERY = 5
 
     @staticmethod
     def _unionfind_partition(batches):
@@ -1366,24 +1363,23 @@ class DedupClusters(Pipe):
                         ).alias("label"),
                     )
                 )
-                if self.shortcut:
-                    # pointer jumping: label(u) <- label(label(u)); labels
-                    # are nodes, so one self-join doubles the hop distance
-                    # covered per round (O(log diameter) total)
-                    hops = new_labels.select(
-                        F.col("node").alias("p"), F.col("label").alias("plabel")
+                # pointer jumping: label(u) <- label(label(u)); labels
+                # are nodes, so one self-join doubles the hop distance
+                # covered per round (O(log diameter) total)
+                hops = new_labels.select(
+                    F.col("node").alias("p"), F.col("label").alias("plabel")
+                )
+                new_labels = (
+                    new_labels.join(hops, new_labels.label == hops.p, "left")
+                    .select(
+                        "node",
+                        F.least(
+                            F.col("label"),
+                            F.coalesce(F.col("plabel"), F.col("label")),
+                        ).alias("label"),
                     )
-                    new_labels = (
-                        new_labels.join(hops, new_labels.label == hops.p, "left")
-                        .select(
-                            "node",
-                            F.least(
-                                F.col("label"),
-                                F.coalesce(F.col("plabel"), F.col("label")),
-                            ).alias("label"),
-                        )
-                    )
-                if (it + 1) % self.checkpoint_every == 0:
+                )
+                if (it + 1) % self._CHECKPOINT_EVERY == 0:
                     new_labels = new_labels.localCheckpoint(eager=False)
                 new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
                 # labels are monotonically non-increasing, so the sum is a
