@@ -128,3 +128,20 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
     pf = plan.split("PartitionFilters:")[-1].splitlines()[0]
     assert "lang" in pf, plan
     assert back.count() == docs.filter(F.col("lang") == "en").count()
+
+
+def test_catalog_table_loader_pins_utc_on_every_call(spark, sf_dir):
+    """``queries.T`` sets the session timezone to UTC on every call, so a
+    timezone changed after an earlier call cannot desync the DuckDB
+    timestamp comparisons."""
+    from warp_pipes_spark.queries import T
+
+    key = "spark.sql.session.timeZone"
+    before = spark.conf.get(key)
+    try:
+        T(spark, sf_dir, "region")
+        spark.conf.set(key, "America/Los_Angeles")
+        T(spark, sf_dir, "region")
+        assert spark.conf.get(key) == "UTC"
+    finally:
+        spark.conf.set(key, before)

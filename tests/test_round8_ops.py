@@ -44,9 +44,11 @@ def test_trigram_short_docs_never_match_but_dont_pollute(spark):
     assert [tuple(r) for r in out] == [(1, 3)]
 
 
-def test_trigram_pushdown_and_materialization_invariance(spark, tmp_path):
-    # same answers with/without the materialized index and with/without
-    # the gram-literal IN pushdown; and a materialized index is REUSED
+def test_trigram_pushdown_and_materialization_invariance(
+    spark, tmp_path, monkeypatch
+):
+    # same answers with/without the gram-literal IN pushdown and with/
+    # without the rarest-gram prune; and the materialized index is REUSED
     # (the posting parquet exists after the first run)
     import os
 
@@ -66,25 +68,19 @@ def test_trigram_pushdown_and_materialization_invariance(spark, tmp_path):
         ["query_id", "pattern"],
     )
     cache = str(tmp_path / "trgm")
+    default_max = TrigramSubstringSearch._GRAM_PUSHDOWN_MAX
     configs = [
-        dict(materialize_index=False),
-        dict(materialize_index=True, index_cache_dir=cache),
-        dict(
-            materialize_index=True,
-            index_cache_dir=cache,
-            gram_pushdown_max=0,
-        ),
-        dict(materialize_index=False, prune_grams=0),
+        (default_max, {}),
+        (0, {}),  # no batch fits the cap: no gram pushdown
+        (default_max, dict(prune_grams=0)),
     ]
-    outs = [
-        sorted(
-            map(
-                tuple,
-                TrigramSubstringSearch(corpus=docs, **cfg)(qs).collect(),
-            )
+    outs = []
+    for pushdown_max, cfg in configs:
+        monkeypatch.setattr(
+            TrigramSubstringSearch, "_GRAM_PUSHDOWN_MAX", pushdown_max
         )
-        for cfg in configs
-    ]
+        eng = TrigramSubstringSearch(corpus=docs, index_cache_dir=cache, **cfg)
+        outs.append(sorted(map(tuple, eng(qs).collect())))
     assert all(o == outs[0] for o in outs)
     assert outs[0] == [(10, 1), (10, 4), (20, 3), (20, 4)]
     # the index artifact landed on disk and is corpus-fingerprint-keyed
@@ -190,7 +186,7 @@ def test_prf_results_cache_route_matches_direct(spark):
     assert key(direct) == key(routed)
 
 
-def test_trigram_similarity_closed_form(spark):
+def test_trigram_similarity_closed_form(spark, tmp_path):
     from warp_pipes_spark.search.trigram import TrigramSimilaritySearch
 
     docs = spark.createDataFrame(
@@ -201,16 +197,17 @@ def test_trigram_similarity_closed_form(spark):
     # doc 2 grams {abc,bcx,cxy,xyz} (nd=4): inter=1 -> 1/(2+4-1)=0.2
     # doc 3 grams {zzz} : inter=0 -> excluded
     qs = spark.createDataFrame([(9, "abcd")], ["query_id", "pattern"])
+    cache = str(tmp_path / "trgm")
     out = {
         r["doc_id"]: r["sim"]
         for r in TrigramSimilaritySearch(
-            corpus=docs, tau=0.2, materialize_index=False
+            corpus=docs, tau=0.2, index_cache_dir=cache
         )(qs).collect()
     }
     assert out == {1: 0.5, 2: 0.2}
     # tau above 0.2 drops doc 2
     out2 = TrigramSimilaritySearch(
-        corpus=docs, tau=0.21, materialize_index=False
+        corpus=docs, tau=0.21, index_cache_dir=cache
     )(qs).collect()
     assert [(r["doc_id"], r["sim"]) for r in out2] == [(1, 0.5)]
     import pytest
@@ -265,7 +262,7 @@ def test_edit_distance_join_repetitive_short_bucket(spark):
     assert (3, 4, 2) in out2 and (1, 2, 1) in out2
 
 
-def test_phrase_search_closed_form_and_guards(spark):
+def test_phrase_search_closed_form_and_guards(spark, tmp_path):
     import pytest
 
     from warp_pipes_spark.search.phrase import PhraseSearch
@@ -283,27 +280,28 @@ def test_phrase_search_closed_form_and_guards(spark):
         [(10, "The Quick  BROWN"), (20, "quick brown fox"), (30, "fox jumps")],
         ["query_id", "phrase"],
     )
+    cache = str(tmp_path / "phrase")
     out = sorted(
-        map(tuple, PhraseSearch(corpus=docs, materialize_index=False)(qs).collect())
+        map(tuple, PhraseSearch(corpus=docs, index_cache_dir=cache)(qs).collect())
     )
     assert out == [(10, 1), (10, 3), (20, 1), (20, 4), (30, 1)]
     # repeated-token phrase: adjacency must require BOTH offsets
     rep = spark.createDataFrame([(1, "quick quick")], ["query_id", "phrase"])
-    out2 = PhraseSearch(corpus=docs, materialize_index=False)(rep).collect()
+    out2 = PhraseSearch(corpus=docs, index_cache_dir=cache)(rep).collect()
     assert [tuple(r) for r in out2] == [(1, 4)]
     with pytest.raises(ValueError, match="ZERO tokens"):
-        PhraseSearch(corpus=docs, materialize_index=False)(
+        PhraseSearch(corpus=docs, index_cache_dir=cache)(
             spark.createDataFrame([(1, "!!!")], ["query_id", "phrase"])
         )
     with pytest.raises(ValueError, match="duplicate query_id"):
-        PhraseSearch(corpus=docs, materialize_index=False)(
+        PhraseSearch(corpus=docs, index_cache_dir=cache)(
             spark.createDataFrame(
                 [(1, "quick"), (1, "brown")], ["query_id", "phrase"]
             )
         )
 
 
-def test_wildcard_search_closed_form_and_guards(spark):
+def test_wildcard_search_closed_form_and_guards(spark, tmp_path):
     from warp_pipes_spark.search.trigram import WildcardLikeSearch
 
     docs = spark.createDataFrame(
@@ -319,7 +317,8 @@ def test_wildcard_search_closed_form_and_guards(spark):
     qs = spark.createDataFrame(
         [(10, "alpha%gamma")], ["query_id", "pattern"]
     )
-    out = WildcardLikeSearch(corpus=docs, materialize_index=False)(qs)
+    cache = str(tmp_path / "trgm")
+    out = WildcardLikeSearch(corpus=docs, index_cache_dir=cache)(qs)
     assert sorted(tuple(r) for r in out.collect()) == [
         (10, 1),
         (10, 3),
@@ -329,20 +328,20 @@ def test_wildcard_search_closed_form_and_guards(spark):
     qs2 = spark.createDataFrame(
         [(11, "alpha _ gamma")], ["query_id", "pattern"]
     )
-    out2 = WildcardLikeSearch(corpus=docs, materialize_index=False)(qs2)
+    out2 = WildcardLikeSearch(corpus=docs, index_cache_dir=cache)(qs2)
     assert sorted(tuple(r) for r in out2.collect()) == [(11, 3)]
     # guard: no literal run >= 3 chars -> no index signal -> raise
     short = spark.createDataFrame(
         [(12, "ab%cd")], ["query_id", "pattern"]
     )
     with pytest.raises(ValueError, match="literal run"):
-        WildcardLikeSearch(corpus=docs, materialize_index=False)(short)
+        WildcardLikeSearch(corpus=docs, index_cache_dir=cache)(short)
     # guard: backslash escape has no oracle equivalent -> raise
     esc = spark.createDataFrame(
         [(13, "alpha\\%gamma")], ["query_id", "pattern"]
     )
     with pytest.raises(ValueError, match="backslash"):
-        WildcardLikeSearch(corpus=docs, materialize_index=False)(esc)
+        WildcardLikeSearch(corpus=docs, index_cache_dir=cache)(esc)
 
 
 def test_textrank_closed_form_and_partition_invariance(spark):
@@ -509,7 +508,7 @@ def test_edit_distance_lookup_tie_breaks(spark):
     assert (r["suggestion"], r["dist"], r["freq"]) == ("datuq", 1, 9)
 
 
-def test_boolean_search_closed_form_and_guards(spark):
+def test_boolean_search_closed_form_and_guards(spark, tmp_path):
     from warp_pipes_spark.search.boolean import BooleanSearch
 
     docs = spark.createDataFrame(
@@ -529,9 +528,10 @@ def test_boolean_search_closed_form_and_guards(spark):
         ],
         "query_id int, must array<string>, must_not array<string>",
     )
+    cache = str(tmp_path / "bool")
     out = sorted(
         tuple(r)
-        for r in BooleanSearch(corpus=docs, materialize_index=False)(
+        for r in BooleanSearch(corpus=docs, index_cache_dir=cache)(
             qs
         ).collect()
     )
@@ -542,13 +542,13 @@ def test_boolean_search_closed_form_and_guards(spark):
         "query_id int, must array<string>, must_not array<string>",
     )
     with pytest.raises(ValueError, match="duplicate query_id"):
-        BooleanSearch(corpus=docs, materialize_index=False)(dup)
+        BooleanSearch(corpus=docs, index_cache_dir=cache)(dup)
     empty = spark.createDataFrame(
         [(1, [], ["a"])],
         "query_id int, must array<string>, must_not array<string>",
     )
     with pytest.raises(ValueError, match="empty must"):
-        BooleanSearch(corpus=docs, materialize_index=False)(empty)
+        BooleanSearch(corpus=docs, index_cache_dir=cache)(empty)
 
 
 def test_leakage_safe_split_cluster_coherent(spark):

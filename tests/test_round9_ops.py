@@ -49,7 +49,7 @@ def _naive_similarity(spark, docs, qs, tau):
     )
 
 
-def test_trgm_sim_dense_mask_strategy_closed_form(spark, tmp_path):
+def test_trgm_sim_dense_mask_strategy_closed_form(spark, tmp_path, monkeypatch):
     """Dense-regime construction: query 'abcdefg' (grams abc..efg,
     nq=5) over a corpus where fan_est (sum of query-gram dfs = 7)
     exceeds |queries| x |docs with grams| (1 x 6 = 6), so the packed-
@@ -63,39 +63,35 @@ def test_trgm_sim_dense_mask_strategy_closed_form(spark, tmp_path):
         ["doc_id", "text"],
     )
     qs = spark.createDataFrame([(9, "abcdefg")], ["query_id", "pattern"])
+    cache = str(tmp_path / "trgm")
 
-    for kwargs in (
-        dict(materialize_index=False),
-        # materialized path additionally exercises the literal-IN gram
-        # pushdown onto the gram-clustered index Parquet
-        dict(
-            materialize_index=True,
-            index_cache_dir=str(tmp_path / "trgm"),
-        ),
-        # mask_grams_max=0 forces the sparse (exhaustive-count) plan —
-        # both strategies must agree exactly
-        dict(materialize_index=False, mask_grams_max=0),
-    ):
+    # a cap of 0 forces the sparse (exhaustive-count) plan; the default
+    # cap takes the mask plan with the literal-IN gram pushdown onto the
+    # gram-clustered index Parquet — both must agree exactly
+    for mask_max in (0, TrigramSimilaritySearch._MASK_GRAMS_MAX):
+        monkeypatch.setattr(TrigramSimilaritySearch, "_MASK_GRAMS_MAX", mask_max)
         out = sorted(
             (r["query_id"], r["doc_id"], r["sim"])
             for r in TrigramSimilaritySearch(
-                corpus=docs, tau=0.4, **kwargs
+                corpus=docs, tau=0.4, index_cache_dir=cache
             )(qs).collect()
         )
         # doc 1: inter=2, nq=5, nd=2 -> 2/5 = 0.4 == tau (boundary KEPT)
         # docs 1x: inter=1 ({abc}), nd=3 -> 1/7 < 0.4 (excluded)
-        assert out == [(9, 1, 0.4)], (kwargs, out)
+        assert out == [(9, 1, 0.4)], (mask_max, out)
 
     # tau just above the boundary drops the doc
     out2 = TrigramSimilaritySearch(
-        corpus=docs, tau=0.41, materialize_index=False
+        corpus=docs, tau=0.41, index_cache_dir=cache
     )(qs).collect()
     assert out2 == []
 
 
 @pytest.mark.parametrize("tau", [0.2, 0.35, 0.6])
 @pytest.mark.parametrize("mask_max", [4096, 0])
-def test_trgm_sim_strategies_match_naive_cross_join(spark, tau, mask_max):
+def test_trgm_sim_strategies_match_naive_cross_join(
+    spark, tmp_path, monkeypatch, tau, mask_max
+):
     """Differential: heavy gram sharing (tiny alphabet — the dense
     regime's trigger shape), short/empty/NULL docs and patterns, vs the
     naive cross-join Jaccard with identical integer algebra, under BOTH
@@ -122,18 +118,16 @@ def test_trgm_sim_strategies_match_naive_cross_join(spark, tau, mask_max):
         ],
         ["query_id", "pattern"],
     )
+    monkeypatch.setattr(TrigramSimilaritySearch, "_MASK_GRAMS_MAX", mask_max)
     got = TrigramSimilaritySearch(
-        corpus=docs,
-        tau=tau,
-        materialize_index=False,
-        mask_grams_max=mask_max,
+        corpus=docs, tau=tau, index_cache_dir=str(tmp_path / "trgm")
     )(qs)
     want = _naive_similarity(spark, docs, qs, tau)
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
 
 
-def test_trgm_sim_mask_width_over_64_buckets(spark):
+def test_trgm_sim_mask_width_over_64_buckets(spark, tmp_path):
     """> 64 distinct batch grams forces multi-long masks (bucket > 0)
     including the sign bit (position 63); differential vs naive."""
     from warp_pipes_spark.search.trigram import TrigramSimilaritySearch
@@ -152,7 +146,7 @@ def test_trgm_sim_mask_width_over_64_buckets(spark):
     )
     tau = 0.2
     got = TrigramSimilaritySearch(
-        corpus=docs, tau=tau, materialize_index=False
+        corpus=docs, tau=tau, index_cache_dir=str(tmp_path / "trgm")
     )(qs)
     want = _naive_similarity(spark, docs, qs, tau)
     assert got.exceptAll(want).count() == 0
@@ -180,8 +174,10 @@ def _naive_boolean(spark, docs, qs):
 
 
 @pytest.mark.parametrize("mask_max", [4096, 0])
-def test_boolean_strategies_match_naive_scan(spark, mask_max):
-    """Differential for both physical strategies (mask_terms_max=0
+def test_boolean_strategies_match_naive_scan(
+    spark, tmp_path, monkeypatch, mask_max
+):
+    """Differential for both physical strategies (_MASK_TERMS_MAX=0
     forces the aggregation plan) over edge shapes: empty must_not, NULL
     must_not array, corpus-absent must term (query matches nothing),
     corpus-absent must_not term (no effect), duplicate terms within a
@@ -208,15 +204,14 @@ def test_boolean_strategies_match_naive_scan(spark, mask_max):
         ],
         "query_id long, must array<string>, must_not array<string>",
     )
-    got = BooleanSearch(
-        corpus=docs, materialize_index=False, mask_terms_max=mask_max
-    )(qs)
+    monkeypatch.setattr(BooleanSearch, "_MASK_TERMS_MAX", mask_max)
+    got = BooleanSearch(corpus=docs, index_cache_dir=str(tmp_path / "bool"))(qs)
     want = _naive_boolean(spark, docs, qs)
     assert got.exceptAll(want).count() == 0
     assert want.exceptAll(got).count() == 0
 
 
-def test_boolean_null_must_element_matches_nothing(spark):
+def test_boolean_null_must_element_matches_nothing(spark, tmp_path, monkeypatch):
     """A NULL element inside must can never be satisfied (count <
     n_must in the aggregation plan); the mask plan must agree."""
     from warp_pipes_spark.search.boolean import BooleanSearch
@@ -228,11 +223,12 @@ def test_boolean_null_must_element_matches_nothing(spark):
         [(10, ["alpha", None], []), (11, ["alpha"], [])],
         "query_id long, must array<string>, must_not array<string>",
     )
-    for mask_max in (4096, 0):
+    for mask_max in (BooleanSearch._MASK_TERMS_MAX, 0):
+        monkeypatch.setattr(BooleanSearch, "_MASK_TERMS_MAX", mask_max)
         out = sorted(
             (r["query_id"], r["doc_id"])
             for r in BooleanSearch(
-                corpus=docs, materialize_index=False, mask_terms_max=mask_max
+                corpus=docs, index_cache_dir=str(tmp_path / "bool")
             )(qs).collect()
         )
         assert out == [(11, 1), (11, 2)], (mask_max, out)
@@ -374,11 +370,12 @@ def test_substring_strategies_match_naive_contains(spark, tmp_path, monkeypatch)
         .filter(F.contains(F.col("text"), F.col("pattern")))
         .select("query_id", "doc_id")
     )
-    sparse = tg.TrigramSubstringSearch(
-        corpus=docs,
-        index_cache_dir=str(tmp_path / "s"),
-        gram_pushdown_max=0,  # forces the aggregation plan, no pushdown
-    )(qs)
+    with monkeypatch.context() as m:
+        # no batch fits the cap: the aggregation plan, no pushdown
+        m.setattr(tg.TrigramSubstringSearch, "_GRAM_PUSHDOWN_MAX", 0)
+        sparse = tg.TrigramSubstringSearch(
+            corpus=docs, index_cache_dir=str(tmp_path / "s")
+        )(qs)
     # force the dense gate regardless of the tiny corpus' real scalars
     monkeypatch.setattr(
         tg.TrigramSubstringSearch, "_n_docs", lambda self, p: 0
@@ -425,7 +422,9 @@ def test_dense_mask_broadcast_cap_takes_sparse_plan(
             ["doc_id", "text"],
         )
         qs = spark.createDataFrame([(9, "abcdefg")], ["query_id", "pattern"])
-        eng = TrigramSimilaritySearch(corpus=docs, tau=0.1, materialize_index=False)
+        eng = TrigramSimilaritySearch(
+            corpus=docs, tau=0.1, index_cache_dir=str(tmp_path / "trgm")
+        )
     else:
         monkeypatch.setattr(BooleanSearch, "_n_docs", lambda self, p: 0)
         docs = spark.createDataFrame(
@@ -436,7 +435,7 @@ def test_dense_mask_broadcast_cap_takes_sparse_plan(
             [(10, ["alpha", "beta"], ["gamma"]), (11, ["beta"], [])],
             "query_id long, must array<string>, must_not array<string>",
         )
-        eng = BooleanSearch(corpus=docs, materialize_index=False)
+        eng = BooleanSearch(corpus=docs, index_cache_dir=str(tmp_path / "bool"))
 
     def plan(df):
         return df._jdf.queryExecution().analyzed().toString()
@@ -477,11 +476,11 @@ def test_wildcard_strategies_match_naive_like(spark, tmp_path, monkeypatch):
         )
         .select("query_id", "doc_id")
     )
-    sparse = tg.WildcardLikeSearch(
-        corpus=docs,
-        index_cache_dir=str(tmp_path / "s"),
-        gram_pushdown_max=0,
-    )(qs)
+    with monkeypatch.context() as m:
+        m.setattr(tg.WildcardLikeSearch, "_GRAM_PUSHDOWN_MAX", 0)
+        sparse = tg.WildcardLikeSearch(
+            corpus=docs, index_cache_dir=str(tmp_path / "s")
+        )(qs)
     monkeypatch.setattr(
         tg.WildcardLikeSearch, "_n_docs", lambda self, p: 0
     )

@@ -193,7 +193,6 @@ def test_ivf_local_trainer_matches_spark_trainer(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     ivf = IvfCosineTopK(
         corpus=emb, n_centroids=8, train_sample=200, kmeans_iters=5, seed=7,
-        materialize_centroids=False, materialize_index=False,
     )
     C_spark = ivf._train_centroids()
     C_local = train_ivf_centroids_local(
@@ -204,16 +203,17 @@ def test_ivf_local_trainer_matches_spark_trainer(spark, sf_dir):
     assert np.array_equal(C_spark, C_local), "trainers diverged (not bit-exact)"
 
 
-def test_ivf_expr_and_blas_families_agree(spark, vectors):
+def test_ivf_expr_and_blas_families_agree(spark, vectors, tmp_path):
     """Both cell-assignment kernels (JVM fold expressions vs pandas-BLAS)
     produce the same top-k on the same trained centroids."""
     from warp_pipes_spark.ml.similarity import IvfCosineTopK
 
     _, df = vectors
     queries = df.filter(F.col("vec_id") < 20)
+    cache = str(tmp_path / "ivf")
     mk = lambda fam: IvfCosineTopK(  # noqa: E731
         corpus=df, k=5, n_centroids=8, n_probe=3, exclude_self=True,
-        assign_family=fam, materialize_centroids=False, materialize_index=False,
+        assign_family=fam, centroid_cache_dir=cache, index_cache_dir=cache,
     )(queries)
     rows = lambda out: sorted(  # noqa: E731
         (r["query_id"], r["rank"], r["neighbor_id"]) for r in out.collect()
@@ -239,7 +239,7 @@ def test_bm25_temperature_scales_scores(spark):
         assert abs(halved[i] - base[i] / 2.0) < 1e-5
 
 
-def test_bm25f_title_hits_outrank_body_hits(spark):
+def test_bm25f_title_hits_outrank_body_hits(spark, tmp_path):
     """Same term frequency, but a hit in the 2x-weighted short title field
     must outscore a hit buried in a long body — the point of BM25F's
     pre-saturation field combination."""
@@ -258,14 +258,14 @@ def test_bm25f_title_hits_outrank_body_hits(spark):
         corpus=docs,
         fields={"title": 2.0, "body": 1.0},
         k=3,
-        materialize_index=False,
+        index_cache_dir=str(tmp_path / "bm25"),
     )(q).collect()
     ranked = sorted(out, key=lambda r: r["rank"])
     assert [r["idx"] for r in ranked] == [0, 1]  # title hit first; doc 2 no hit
     assert ranked[0]["score"] > ranked[1]["score"]
 
 
-def test_bm25f_empty_field_rows_still_scored(spark):
+def test_bm25f_empty_field_rows_still_scored(spark, tmp_path):
     """Docs with an empty field keep their other-field postings and the
     per-field avgdl still counts them (sentinel rows)."""
     from warp_pipes_spark.search.bm25 import Bm25FSearch
@@ -279,7 +279,7 @@ def test_bm25f_empty_field_rows_still_scored(spark):
         corpus=docs,
         fields={"title": 2.0, "body": 1.0},
         k=3,
-        materialize_index=False,
+        index_cache_dir=str(tmp_path / "bm25"),
     )(q).collect()
     assert {r["idx"] for r in out} == {0, 1}
     by_idx = {r["idx"]: r["score"] for r in out}
@@ -303,7 +303,7 @@ def test_pq_recall_against_exact(spark, vectors):
     assert hits >= 0.7 * len(top1), f"PQ recall too low: {hits}/{len(top1)}"
 
 
-def test_pq_tied_scores_resolve_by_neighbor_id_across_partitions(spark):
+def test_pq_tied_scores_resolve_by_neighbor_id_across_partitions(spark, tmp_path):
     """Regression for the per-batch partial top-k: candidates tied at the
     k-th ROUNDED score boundary must be resolved by (score DESC,
     neighbor_id ASC) — the same order the global window and the SQL
@@ -328,7 +328,8 @@ def test_pq_tied_scores_resolve_by_neighbor_id_across_partitions(spark):
             rows, "vec_id long, embedding array<double>"
         ).repartition(nparts)
         out = PqCosineTopK(
-            corpus=corpus, k=5, m=4, exclude_self=False, materialize_index=False
+            corpus=corpus, k=5, m=4, exclude_self=False,
+            index_cache_dir=str(tmp_path / "pq"),
         )(queries)
         results.append([(r["rank"], r["neighbor_id"]) for r in out.collect()])
     # among 50 bit-identically-scored duplicates, the 5 smallest ids win
@@ -681,7 +682,7 @@ def test_pq_local_trainer_matches_spark_trainer(spark, sf_dir):
     assert np.array_equal(pq.codebooks, local), "PQ trainers diverged"
 
 
-def test_lsh_near_dup_gate_finds_planted_duplicates(spark):
+def test_lsh_near_dup_gate_finds_planted_duplicates(spark, tmp_path):
     """The admission gate finds a planted near-duplicate of a corpus
     vector (cosine ~0.99 collides in every LSH table) and emits pairs as
     NEW x CORPUS only."""
@@ -701,7 +702,7 @@ def test_lsh_near_dup_gate_finds_planted_duplicates(spark):
     new = spark.createDataFrame(new_rows, "vec_id long, embedding array<double>")
     out = LshCosineNearDup(
         corpus=corpus, threshold=0.9, dim=16, n_planes=4, n_tables=8,
-        materialize_index=False,
+        index_cache_dir=str(tmp_path / "lsh"),
     )(new).collect()
     pairs = {(r["new_id"], r["corpus_id"]) for r in out}
     assert (100, 7) in pairs
@@ -761,7 +762,7 @@ def test_ann_recall_sweep_monotone(spark, sf_dir):
     assert recalls[-1] > recalls[0], recalls
 
 
-def test_bm25_threshold_prune_is_lossless(spark, sf_dir):
+def test_bm25_threshold_prune_is_lossless(spark, sf_dir, tmp_path):
     """The seed-threshold prune (maxscore=True, the default) must return
     BIT-IDENTICAL results to the exhaustive plan for every k, including
     k=1 and k past the match count — it is a physical optimization, not a
@@ -778,20 +779,21 @@ def test_bm25_threshold_prune_is_lossless(spark, sf_dir):
         F.substring("text", 10, 40).alias("text"),
     )
     one_query = queries.limit(1)
+    cache = str(tmp_path / "bm25")
     for k in (1, 5, 23):
         for batch in (queries, one_query):
             fast = Bm25Search(
-                corpus=docs, k=k, maxscore=True, materialize_index=False
+                corpus=docs, k=k, maxscore=True, index_cache_dir=cache
             )(batch)
             slow = Bm25Search(
-                corpus=docs, k=k, maxscore=False, materialize_index=False
+                corpus=docs, k=k, maxscore=False, index_cache_dir=cache
             )(batch)
             assert sorted(map(tuple, fast.collect())) == sorted(
                 map(tuple, slow.collect())
             ), f"prune changed results at k={k}"
 
 
-def test_bm25_threshold_prune_lossless_on_variants(spark, sf_dir):
+def test_bm25_threshold_prune_lossless_on_variants(spark, sf_dir, tmp_path):
     """Round-6 extension: the prune must stay BIT-IDENTICAL on the
     aux-boosted (fixed and log-length-scaled weights), term-filtered,
     champion-capped and BM25F paths — each previously excluded from
@@ -823,16 +825,15 @@ def test_bm25_threshold_prune_lossless_on_variants(spark, sf_dir):
             corpus_filter_key="lang",
         ),
     }
+    cache = str(tmp_path / "bm25")
     for label, kw in configs.items():
         for k in (1, 7):
             fast = Bm25Search(
-                corpus=docs, k=k, maxscore=True,
-                materialize_index=False, **kw,
+                corpus=docs, k=k, maxscore=True, index_cache_dir=cache, **kw,
             )
             assert fast._maxscore_eligible(), label
             slow = Bm25Search(
-                corpus=docs, k=k, maxscore=False,
-                materialize_index=False, **kw,
+                corpus=docs, k=k, maxscore=False, index_cache_dir=cache, **kw,
             )
             assert sorted(map(tuple, fast(queries).collect())) == sorted(
                 map(tuple, slow(queries).collect())
@@ -849,12 +850,12 @@ def test_bm25_threshold_prune_lossless_on_variants(spark, sf_dir):
     for k in (1, 7):
         fast = Bm25FSearch(
             corpus=corpus_f, fields={"title": 2.0, "body": 1.0}, k=k,
-            maxscore=True, materialize_index=False,
+            maxscore=True, index_cache_dir=cache,
         )
         assert fast._maxscore_eligible()
         slow = Bm25FSearch(
             corpus=corpus_f, fields={"title": 2.0, "body": 1.0}, k=k,
-            maxscore=False, materialize_index=False,
+            maxscore=False, index_cache_dir=cache,
         )
         assert sorted(map(tuple, fast(queries).collect())) == sorted(
             map(tuple, slow(queries).collect())

@@ -118,16 +118,15 @@ def _cells():
     for k in (5, 25):
         add(
             f"bm25_k{k}",
-            lambda spark, sf, k=k: Bm25Search(
-                corpus=_docs(spark, sf), k=k, materialize_index=False
-            )(_bm25_queries(spark, sf)),
+            lambda spark, sf, k=k: Bm25Search(corpus=_docs(spark, sf), k=k)(
+                _bm25_queries(spark, sf)
+            ),
             bm25_oracle_sql("documents", BM25_QUERIES_CTE, k=k),
         )
     add(
         "bm25_k1_0.9_b_0.4",
         lambda spark, sf: Bm25Search(
             corpus=_docs(spark, sf), k=10, k1=0.9, b=0.4,
-            materialize_index=False,
         )(_bm25_queries(spark, sf)),
         bm25_oracle_sql("documents", BM25_QUERIES_CTE, k=10, k1=0.9, b=0.4),
     )
@@ -135,7 +134,6 @@ def _cells():
         "bm25_champion4",
         lambda spark, sf: Bm25Search(
             corpus=_docs(spark, sf), k=10, champion_size=4,
-            materialize_index=False,
         )(_bm25_queries(spark, sf)),
         bm25_oracle_sql("documents", BM25_QUERIES_CTE, k=10, champion_size=4),
     )
@@ -144,7 +142,6 @@ def _cells():
         lambda spark, sf: Bm25Search(
             corpus=_docs(spark, sf), k=10, aux_text_col="aux",
             aux_weight=1.25, filter_key="qfilter", corpus_filter_key="lang",
-            materialize_index=False,
         )(_aux_queries(spark, sf)),
         bm25_oracle_sql(
             "documents", BM25F_QUERIES_CTE, k=10, aux_weight=1.25,
@@ -155,7 +152,7 @@ def _cells():
         "bm25_scaled_aux0.3",
         lambda spark, sf: Bm25Search(
             corpus=_docs(spark, sf), k=10, aux_text_col="aux",
-            aux_weight=0.3, scale_aux_weight=True, materialize_index=False,
+            aux_weight=0.3, scale_aux_weight=True,
         )(
             _docs(spark, sf)
             .filter(F.col("doc_id") % 50 == 0)
@@ -194,7 +191,6 @@ def _cells():
         lambda spark, sf: Bm25FSearch(
             corpus=_bm25f_corpus(spark, sf),
             fields={"title": 3.0, "body": 0.5}, k=10,
-            materialize_index=False,
         )(_bm25_queries(spark, sf)),
         bm25f_oracle_sql(
             "documents", BM25_QUERIES_CTE,
@@ -207,7 +203,6 @@ def _cells():
             corpus=_bm25f_corpus(spark, sf),
             fields={"title": 2.0, "body": 1.0},
             field_b={"title": 0.3, "body": 0.9}, k=10,
-            materialize_index=False,
         )(_bm25_queries(spark, sf)),
         bm25f_oracle_sql(
             "documents", BM25_QUERIES_CTE,

@@ -259,7 +259,6 @@ class PqCosineTopK(Pipe):
         corpus_vec: str = "embedding",
         exclude_self: bool = True,
         index_cache_dir: str | None = None,
-        materialize_index: bool = True,
         max_query_rows: int = 100_000,
         **kwargs,
     ):
@@ -277,7 +276,6 @@ class PqCosineTopK(Pipe):
         self.corpus_vec = corpus_vec
         self.exclude_self = exclude_self
         self.index_cache_dir = index_cache_dir
-        self.materialize_index = materialize_index
 
     _no_fingerprint = ("corpus", "index_cache_dir")
 
@@ -289,20 +287,10 @@ class PqCosineTopK(Pipe):
         index-once-query-many contract of the other engines. The codes
         table is ~dim*4/m times smaller than the corpus — the artifact
         IS the compression."""
-        import numpy as np
-
-        if not self.materialize_index:
-            pq = ProductQuantizer(dim, m=self.m, k=self.n_codes, seed=self.seed).fit(
-                self.corpus, self.corpus_vec, self.corpus_id, self.train_sample
-            )
-            codes = self.corpus.select(
-                F.col(self.corpus_id).alias("neighbor_id"),
-                pq.encode_udf()(F.col(self.corpus_vec)).alias("codes"),
-            )
-            return pq.codebooks, codes
-
         import os
         import tempfile
+
+        import numpy as np
 
         from warp_pipes_spark.core.fingerprint import (
             fingerprint_dataframe,

@@ -335,9 +335,7 @@ class LshCosineTopK(Pipe):
         corpus_id: str = "vec_id",
         corpus_vec: str = "embedding",
         exclude_self: bool = True,
-        broadcast_queries: bool = True,
         index_cache_dir: Optional[str] = None,
-        materialize_index: bool = True,
         plane_family: str = "randn",
         **kwargs,
     ):
@@ -357,14 +355,12 @@ class LshCosineTopK(Pipe):
         # plain SQL, which makes the WHOLE candidate-generation + re-rank
         # pipeline differentially testable against a DuckDB oracle
         self.plane_family = plane_family
-        self.broadcast_queries = broadcast_queries
         self.query_id = query_id
         self.query_vec = query_vec
         self.corpus_id = corpus_id
         self.corpus_vec = corpus_vec
         self.exclude_self = exclude_self
         self.index_cache_dir = index_cache_dir
-        self.materialize_index = materialize_index
 
     _no_fingerprint = ("corpus", "index_cache_dir")
 
@@ -382,8 +378,6 @@ class LshCosineTopK(Pipe):
                 ),
             )
 
-        if not self.materialize_index:
-            return build()
         import os
         import tempfile
 
@@ -471,12 +465,13 @@ class LshCosineTopK(Pipe):
             F.col(self.corpus_vec).cast("array<double>").alias("cv"),
         ).withColumn("cn", _norm(F.col("cv")))
         bucket_udf = self._bucket_udf()
-        qe = q.select(
-            "query_id", F.posexplode(bucket_udf(F.col("qv"))).alias("table_id", "bucket")
+        qe = F.broadcast(
+            q.select(
+                "query_id",
+                F.posexplode(bucket_udf(F.col("qv"))).alias("table_id", "bucket"),
+            )
         )
         ce = self._corpus_buckets(c)
-        if self.broadcast_queries:
-            qe = F.broadcast(qe)
         cand = (
             qe.join(ce, on=["table_id", "bucket"])
             .select("query_id", "neighbor_id")
@@ -739,12 +734,9 @@ class IvfCosineTopK(Pipe):
         corpus_id: str = "vec_id",
         corpus_vec: str = "embedding",
         exclude_self: bool = True,
-        broadcast_queries: bool = True,
         assign_family: str = "blas",
         centroid_cache_dir: Optional[str] = None,
-        materialize_centroids: bool = True,
         index_cache_dir: Optional[str] = None,
-        materialize_index: bool = True,
         **kwargs,
     ):
         super().__init__(**kwargs)
@@ -760,16 +752,13 @@ class IvfCosineTopK(Pipe):
         self.corpus_id = corpus_id
         self.corpus_vec = corpus_vec
         self.exclude_self = exclude_self
-        self.broadcast_queries = broadcast_queries
         if assign_family not in ("expr", "blas"):
             raise ValueError(
                 f"assign_family must be 'expr' or 'blas', got {assign_family!r}"
             )
         self.assign_family = assign_family
         self.centroid_cache_dir = centroid_cache_dir
-        self.materialize_centroids = materialize_centroids
         self.index_cache_dir = index_cache_dir
-        self.materialize_index = materialize_index
 
     _no_fingerprint = ("corpus", "centroid_cache_dir", "index_cache_dir")
 
@@ -780,8 +769,6 @@ class IvfCosineTopK(Pipe):
         training config) reuses one k-means run, across sessions. The
         artifact is a tiny (n_centroids x dim) Parquet — at cluster scale
         point ``centroid_cache_dir`` at shared storage next to the others."""
-        if not self.materialize_centroids:
-            return self._train_centroids()
         import os
         import tempfile
 
@@ -926,8 +913,6 @@ class IvfCosineTopK(Pipe):
                 cell = self._cell_udf(centroids, 1)(F.col("cv"))[0]
             return c.withColumn("cell", cell)
 
-        if not self.materialize_index:
-            return build()
         import os
         import tempfile
 
@@ -973,9 +958,9 @@ class IvfCosineTopK(Pipe):
             )
         else:
             probe_cells = self._cell_udf(centroids, self.n_probe)(F.col("qv"))
-        qe = q.select("query_id", "qv", "qn", F.explode(probe_cells).alias("cell"))
-        if self.broadcast_queries:
-            qe = F.broadcast(qe)
+        qe = F.broadcast(
+            q.select("query_id", "qv", "qn", F.explode(probe_cells).alias("cell"))
+        )
         cand = qe.join(ce, on="cell")
         if self.exclude_self:
             cand = cand.where(F.col("query_id") != F.col("neighbor_id"))

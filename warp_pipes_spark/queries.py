@@ -19,7 +19,6 @@ string/date/nesting/dedup/similarity/search)."""
 from __future__ import annotations
 
 import os
-import weakref
 from dataclasses import dataclass
 from typing import Callable, Dict, Optional
 
@@ -89,23 +88,11 @@ class QuerySpec:
     oracle: Optional[str]  # DuckDB SQL, or None for rows-only checks
 
 
-_tz_pinned: "weakref.WeakSet" = weakref.WeakSet()
-
-
 def T(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # timestamps must be interpreted identically to DuckDB's naive
-    # reading; pin the timezone ONCE per session instead of paying a
-    # py4j conf round trip at every one of the 250 T() call sites
-    try:
-        pinned = spark in _tz_pinned
-    except TypeError:
-        pinned = False
-    if not pinned:
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        try:
-            _tz_pinned.add(spark)
-        except TypeError:
-            pass
+    # reading; set the timezone on every call, since any later change to
+    # the session timezone would otherwise desync every comparison
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
     return load_table(spark, sf_dir, name)
 
 
@@ -999,7 +986,6 @@ def q159_embedding_near_dup(spark, sf):
         n_planes=6,
         n_tables=8,
         plane_family="md5",
-        materialize_index=False,
     )(new)
 
 

@@ -131,10 +131,7 @@ class Bm25Search(Pipe):
         k1: float = K1,
         b: float = B,
         temperature: float = 1.0,
-        broadcast_queries: bool = True,
-        persist: bool = True,
         index_cache_dir: str | None = None,
-        materialize_index: bool = True,
         champion_size: int | None = None,
         maxscore: bool = True,
         **kwargs,
@@ -162,9 +159,6 @@ class Bm25Search(Pipe):
         # reference parity: ES scores divided by temperature
         # (warp_pipes/search/elasticsearch.py:289-292)
         self.temperature = temperature
-        self.broadcast_queries = broadcast_queries
-        self.persist = persist
-        self.materialize_index = materialize_index
         # champion lists (impact-ordered index truncation, Manning et al.
         # IIR §7.1.3): keep only the top-`champion_size` postings per term
         # by baked score. The candidate join then touches <= |q| * C rows
@@ -227,8 +221,6 @@ class Bm25Search(Pipe):
         I/O pass the incremental append exists to avoid. The scored bake
         still reads every posting row (global idf/avgdl shift), so
         results are unchanged."""
-        if not self.materialize_index:
-            return self._postings()
         spark = self.corpus.sparkSession
         manager = CacheManager(self.index_cache_dir)
         fp_raw = self._tok_fingerprint() + "_raw"
@@ -257,10 +249,7 @@ class Bm25Search(Pipe):
             k1=self.k1,
             b=self.b,
             temperature=self.temperature,
-            broadcast_queries=self.broadcast_queries,
-            persist=self.persist,
             index_cache_dir=self.index_cache_dir,
-            materialize_index=self.materialize_index,
             champion_size=self.champion_size,
             maxscore=self.maxscore,
         )
@@ -316,15 +305,6 @@ class Bm25Search(Pipe):
         and the postings become the written, term-partitioned artifact every
         executor reads locally."""
         spark = self.corpus.sparkSession
-        if not self.materialize_index:
-            postings = self._postings()
-            if self.persist:
-                # eager localCheckpoint (not a bare persist): the returned
-                # plan references the postings lazily, so an un-unpersisted
-                # cache would leak for the session's lifetime
-                postings = postings.localCheckpoint()
-            return self._champion_cap(self._score_postings(postings))
-
         manager = CacheManager(self.index_cache_dir)
         # the stats probe and the bake both read the raw postings: keep
         # them persisted until the publish has written the bake
@@ -349,7 +329,7 @@ class Bm25Search(Pipe):
             # no repartition on write: the query join broadcasts the query
             # terms and STREAMS the postings, so postings-side co-location
             # buys nothing — writing map-side output avoids a full shuffle
-            return self._champion_cap(self._score_postings(postings, stats=stats))
+            return self._champion_cap(self._score_postings(postings, stats))
 
         try:
             return manager.get_or_compute(
@@ -378,9 +358,9 @@ class Bm25Search(Pipe):
         """Index-intrinsic corpus scalars — ONE tiny agg over the (ideally
         persisted) raw postings, memoized in the raw artifact's sidecar
         meta by `_index` so score re-bakes (appends, k1/b re-configs)
-        never repeat the doc-level distinct pass. Values are the exact
-        doubles the old broadcast-stats crossJoin carried (JSON round-
-        trips doubles exactly), so literal injection is bit-identical."""
+        never repeat the doc-level distinct pass. JSON round-trips the
+        doubles exactly, so the injected literals are bit-identical to the
+        computed stats."""
         row = (
             postings.select("doc_id", "dl")
             .distinct()
@@ -394,39 +374,21 @@ class Bm25Search(Pipe):
             "avgdl": None if row["avgdl"] is None else float(row["avgdl"]),
         }
 
-    def _score_postings(self, postings: DataFrame, stats: dict = None) -> DataFrame:
+    def _score_postings(self, postings: DataFrame, stats: dict) -> DataFrame:
         """postings (term, doc_id, dl, tf) -> (term, doc_id, score_d DOUBLE).
         The arithmetic is the oracle's expression tree verbatim (ln / mul /
         div over exact ints + corpus stats), so the double is bit-identical
         across engines. NULL-term sentinel rows (token-less docs) feed the
-        stats, then drop out in the df inner join.
-
-        With ``stats`` (the `_corpus_stats` scalars), n_docs/avgdl fold in
-        as LITERALS — the doc-level distinct+agg pass and the stats
-        crossJoin vanish from the bake plan; without it (non-materialized
-        one-shot engines) the stats stay a fused broadcast subtree."""
-        if stats is not None:
-            n_docs_d = F.lit(float(stats["n_docs"]))
-            avgdl_d = F.lit(stats["avgdl"]).cast("double")
-        else:
-            stats_df = (
-                postings.select("doc_id", "dl")
-                .distinct()
-                .agg(
-                    F.count(F.lit(1)).alias("n_docs"),
-                    (F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"),
-                )
-            )
-            n_docs_d = F.col("n_docs").cast("double")
-            avgdl_d = F.col("avgdl")
+        stats, then drop out in the df inner join. ``stats`` (the
+        `_corpus_stats` scalars) folds n_docs/avgdl in as literals."""
+        n_docs_d = F.lit(float(stats["n_docs"]))
+        avgdl_d = F.lit(stats["avgdl"]).cast("double")
         df_counts = (
             postings.where(F.col("term").isNotNull())
             .groupBy("term")
             .agg(F.count(F.lit(1)).alias("df"))
         )
         enriched = postings.join(df_counts, "term")
-        if stats is None:
-            enriched = enriched.crossJoin(F.broadcast(stats_df))
         idf = F.log(
             F.lit(1.0)
             + (n_docs_d - F.col("df") + F.lit(0.5))
@@ -472,8 +434,7 @@ class Bm25Search(Pipe):
         )
         # with a bounded query batch over a huge corpus, broadcasting the
         # exploded query terms keeps the postings side shuffle-free
-        if self.broadcast_queries:
-            q_terms = F.broadcast(q_terms)
+        q_terms = F.broadcast(q_terms)
         if self.filter_key:
             # the doc's filter value becomes a JOIN KEY (not a post-join
             # predicate): the (term, filter) equi-join drops non-matching
@@ -573,8 +534,6 @@ class Bm25Search(Pipe):
                 .drop("__cr")
             )
 
-        if not self.materialize_index:
-            return build()
         return CacheManager(self.index_cache_dir).get_or_compute(
             self.corpus.sparkSession,
             self._index_fingerprint() + f"_seedv2_{C}",
@@ -591,8 +550,6 @@ class Bm25Search(Pipe):
         def probe() -> int:
             return int(stats.agg(F.sum("df")).collect()[0][0] or 0)
 
-        if not self.materialize_index:
-            return probe()
         return CacheManager(self.index_cache_dir).meta_value(
             self._index_fingerprint() + "_termdf", "n_postings", probe
         )
@@ -609,11 +566,8 @@ class Bm25Search(Pipe):
         """term -> df as a driver dict, read straight from the termdf
         artifact's Parquet files with pyarrow — ZERO Spark jobs — and
         memoized per artifact snapshot (``io.memo_on_snapshot``, so a
-        republish invalidates). None when the index is unmaterialized,
-        the artifact is missing, or the vocabulary exceeds the
-        driver-memory cap."""
-        if not self.materialize_index:
-            return None
+        republish invalidates). None when the artifact is missing or the
+        vocabulary exceeds the driver-memory cap."""
         from warp_pipes_spark.io import memo_on_snapshot
 
         manager = CacheManager(self.index_cache_dir)
@@ -688,8 +642,6 @@ class Bm25Search(Pipe):
                 .agg(F.count(F.lit(1)).alias("df"))
             )
 
-        if not self.materialize_index:
-            return build()
         return CacheManager(self.index_cache_dir).get_or_compute(
             self.corpus.sparkSession, self._index_fingerprint() + "_termdf", build
         )
@@ -760,9 +712,7 @@ class Bm25Search(Pipe):
           fan-out over a 1.16M-row index): the fan-out shuffle was 20.7 s
           of a 44 s pass; this plan removes it entirely."""
         seed = self._seed_table(postings)
-        qterms = self._query_legs(df)
-        if self.broadcast_queries:
-            qterms = F.broadcast(qterms)
+        qterms = F.broadcast(self._query_legs(df))
         # per-contribution units: round AFTER the leg-weight multiply,
         # exactly `_scored`'s cast point. Single-leg configs have a
         # constant weight 1.0, so the cast moves to the POSTINGS side —
@@ -1070,8 +1020,7 @@ class Bm25FSearch(Bm25Search):
 
     def _corpus_stats(self, postings: DataFrame) -> dict:
         """Per-field avgdl + corpus n_docs scalars (two tiny aggs over the
-        persisted raw), exactly the doubles the old broadcast joins
-        carried."""
+        persisted raw postings)."""
         avg_rows = (
             postings.select("field", "doc_id", "dl")
             .distinct()
@@ -1091,17 +1040,14 @@ class Bm25FSearch(Bm25Search):
             },
         }
 
-    def _score_postings(self, postings: DataFrame, stats: dict = None) -> DataFrame:
+    def _score_postings(self, postings: DataFrame, stats: dict) -> DataFrame:
         """(term, doc_id, dl, tf, field) -> (term, doc_id, score_d). The
         field combination ``ctf`` is summed in DECIMAL so the result is
         independent of which field's row arrives first; df counts a doc
         once however many fields hit. Sentinel NULL-term rows keep every
-        (field, doc) in the per-field avgdl.
-
-        With ``stats`` the per-field avgdl becomes a literal map lookup
-        (like w/b) and n_docs a literal — the doc-level distinct passes
-        and two broadcast joins vanish from the bake plan; values are the
-        identical doubles, so scores are bit-identical."""
+        (field, doc) in the per-field avgdl. ``stats`` (the
+        `_corpus_stats` scalars) makes the per-field avgdl a literal map
+        lookup (like w/b) and n_docs a literal."""
         real = postings.where(F.col("term").isNotNull())
         df_counts = (
             real.select("term", "doc_id").distinct().groupBy("term").agg(
@@ -1114,22 +1060,18 @@ class Bm25FSearch(Bm25Search):
         b_map = F.create_map(
             *[x for f, b in sorted(self.field_b.items()) for x in (F.lit(f), F.lit(float(b)))]
         )
-        if stats is not None:
-            if stats["avgdl_f"]:
-                avgdl_map = F.create_map(
-                    *[
-                        x
-                        for f, a in sorted(stats["avgdl_f"].items())
-                        for x in (F.lit(f), F.lit(a).cast("double"))
-                    ]
-                )
-                avgdl_d = avgdl_map[F.col("field")]
-            else:  # empty corpus: no per-field rows, postings are empty
-                avgdl_d = F.lit(None).cast("double")
-            n_docs_d = F.lit(float(stats["n_docs"]))
-        else:
-            avgdl_d = F.col("avgdl")
-            n_docs_d = F.col("n_docs").cast("double")
+        if stats["avgdl_f"]:
+            avgdl_map = F.create_map(
+                *[
+                    x
+                    for f, a in sorted(stats["avgdl_f"].items())
+                    for x in (F.lit(f), F.lit(a).cast("double"))
+                ]
+            )
+            avgdl_d = avgdl_map[F.col("field")]
+        else:  # empty corpus: no per-field rows, postings are empty
+            avgdl_d = F.lit(None).cast("double")
+        n_docs_d = F.lit(float(stats["n_docs"]))
         tfn = (
             F.col("tf").cast("double")
             / (
@@ -1138,24 +1080,10 @@ class Bm25FSearch(Bm25Search):
                 + b_map[F.col("field")] * F.col("dl") / avgdl_d
             )
         ) * w_map[F.col("field")]
-        ctf_src = real
-        if stats is None:
-            avgdl_f = (
-                postings.select("field", "doc_id", "dl")
-                .distinct()
-                .groupBy("field")
-                .agg((F.sum("dl").cast("double") / F.count(F.lit(1))).alias("avgdl"))
-            )
-            ctf_src = real.join(F.broadcast(avgdl_f), "field")
-        ctf = ctf_src.groupBy("term", "doc_id").agg(
+        ctf = real.groupBy("term", "doc_id").agg(
             F.sum(tfn.cast("decimal(18,8)")).cast("double").alias("ctf")
         )
         enriched = ctf.join(df_counts, "term")
-        if stats is None:
-            n_docs_df = postings.select("doc_id").distinct().agg(
-                F.count(F.lit(1)).alias("n_docs")
-            )
-            enriched = enriched.crossJoin(F.broadcast(n_docs_df))
         idf = F.log(
             F.lit(1.0)
             + (n_docs_d - F.col("df") + F.lit(0.5))

@@ -21,7 +21,7 @@ Plan shape (100 TB posture, the ``search/trigram.py`` conventions):
 
 Round-9 DENSE strategy (the ``search/trigram.py`` similarity engine's
 convention, chosen per batch from exact scalars): when the batch's
-distinct terms fit ``mask_terms_max`` and the posting fan-out
+distinct terms fit ``_MASK_TERMS_MAX`` and the posting fan-out
 Σ df(query terms) exceeds |queries| x |docs| — a near-uniform-df
 vocabulary where every term's posting slice is corpus-sized — each
 document's queried-term set packs into ceil(n/64) longs via ONE
@@ -81,9 +81,7 @@ class BooleanSearch(Pipe):
         query_id: str = "query_id",
         must_col: str = "must",
         must_not_col: str = "must_not",
-        materialize_index: bool = True,
         index_cache_dir: Optional[str] = None,
-        mask_terms_max: int = 4096,
         **kwargs,
     ):
         super().__init__(**kwargs)
@@ -93,15 +91,15 @@ class BooleanSearch(Pipe):
         self.query_id = query_id
         self.must_col = must_col
         self.must_not_col = must_not_col
-        self.materialize_index = materialize_index
         self.index_cache_dir = index_cache_dir or boolean_cache_dir()
-        # cap on the batch's DISTINCT term count for the literal-IN
-        # pushdown and the dense regime's bitmask width; larger batches
-        # fall back to the aggregation plan with no pushdown. 0
-        # disables both.
-        self.mask_terms_max = mask_terms_max
 
     _no_fingerprint = ("corpus",)
+
+    # cap on the batch's DISTINCT term count for the literal-IN pushdown
+    # and the dense regime's bitmask width; larger batches fall back to
+    # the aggregation plan with no pushdown. Tests set 0 to force that
+    # plan.
+    _MASK_TERMS_MAX = 4096
 
     def _index_fingerprint(self) -> str:
         from warp_pipes_spark.core.fingerprint import (
@@ -131,14 +129,10 @@ class BooleanSearch(Pipe):
                 F.explode(
                     F.array_distinct(tokens_expr(F.col(self.corpus_text)))
                 ).alias("term"),
-            )
+            ).repartitionByRange("term").sortWithinPartitions("term")
 
-        if not self.materialize_index:
-            return build()
         return CacheManager(self.index_cache_dir).get_or_compute(
-            self.corpus.sparkSession,
-            self._index_fingerprint(),
-            lambda: build().repartitionByRange("term").sortWithinPartitions("term"),
+            self.corpus.sparkSession, self._index_fingerprint(), build
         )
 
     def _term_stats(self, posting: DataFrame) -> DataFrame:
@@ -148,8 +142,6 @@ class BooleanSearch(Pipe):
         def build() -> DataFrame:
             return posting.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
 
-        if not self.materialize_index:
-            return build()
         return CacheManager(self.index_cache_dir).get_or_compute(
             self.corpus.sparkSession, self._index_fingerprint() + "_termdf", build
         )
@@ -161,8 +153,6 @@ class BooleanSearch(Pipe):
         def probe() -> int:
             return posting.select("doc_id").distinct().count()
 
-        if not self.materialize_index:
-            return probe()
         return CacheManager(self.index_cache_dir).meta_value(
             self._index_fingerprint() + "_termdf", "n_docs", probe
         )
@@ -222,7 +212,7 @@ class BooleanSearch(Pipe):
                     F.slice(
                         F.sort_array(F.collect_set("term")),
                         1,
-                        self.mask_terms_max + 1,
+                        self._MASK_TERMS_MAX + 1,
                     ).alias("__terms"),
                 )
             )
@@ -240,9 +230,7 @@ class BooleanSearch(Pipe):
                 " lookup."
             )
         batch_terms = list(row["__terms"] or [])
-        bounded = bool(self.mask_terms_max) and (
-            len(batch_terms) <= self.mask_terms_max
-        )
+        bounded = len(batch_terms) <= self._MASK_TERMS_MAX
         # the probe/memo must see the FULL posting (n_docs is an index
         # fact, not a batch fact), so take it before any pushdown
         dense = (

@@ -72,7 +72,6 @@ class PhraseSearch(Pipe):
         corpus_text: str = "text",
         query_id: str = "query_id",
         phrase_col: str = "phrase",
-        materialize_index: bool = True,
         index_cache_dir: Optional[str] = None,
         **kwargs,
     ):
@@ -82,7 +81,6 @@ class PhraseSearch(Pipe):
         self.corpus_text = corpus_text
         self.query_id = query_id
         self.phrase_col = phrase_col
-        self.materialize_index = materialize_index
         self.index_cache_dir = index_cache_dir or phrase_cache_dir()
 
     _no_fingerprint = ("corpus",)
@@ -113,14 +111,10 @@ class PhraseSearch(Pipe):
                 F.posexplode(tokens_expr(F.col(self.corpus_text))).alias(
                     "pos", "term"
                 ),
-            )
+            ).repartitionByRange("term").sortWithinPartitions("term")
 
-        if not self.materialize_index:
-            return build()
         return CacheManager(self.index_cache_dir).get_or_compute(
-            self.corpus.sparkSession,
-            self._index_fingerprint(),
-            lambda: build().repartitionByRange("term").sortWithinPartitions("term"),
+            self.corpus.sparkSession, self._index_fingerprint(), build
         )
 
     def _term_df(self, posting: DataFrame) -> DataFrame:
@@ -131,8 +125,6 @@ class PhraseSearch(Pipe):
         def build() -> DataFrame:
             return posting.groupBy("term").agg(F.count(F.lit(1)).alias("__df"))
 
-        if not self.materialize_index:
-            return build()
         return CacheManager(self.index_cache_dir).get_or_compute(
             self.corpus.sparkSession, self._index_fingerprint() + "_df", build
         )

@@ -68,9 +68,7 @@ class DirichletQLSearch(Pipe):
         corpus_text: str = "text",
         query_id: str = "query_id",
         query_text: str = "text",
-        broadcast_queries: bool = True,
         index_cache_dir: str | None = None,
-        materialize_index: bool = True,
         prune: bool = True,
         **kwargs,
     ):
@@ -85,9 +83,7 @@ class DirichletQLSearch(Pipe):
         self.corpus_text = corpus_text
         self.query_id = query_id
         self.query_text = query_text
-        self.broadcast_queries = broadcast_queries
         self.index_cache_dir = index_cache_dir
-        self.materialize_index = materialize_index
 
     # prune/cache-dir don't change results (prune is lossless), so they
     # stay out of the operator fingerprint like Bm25Search's maxscore
@@ -100,7 +96,6 @@ class DirichletQLSearch(Pipe):
             corpus_id=self.corpus_id,
             corpus_text=self.corpus_text,
             index_cache_dir=self.index_cache_dir,
-            materialize_index=self.materialize_index,
         )
 
     def _ql_fingerprint(self) -> str:
@@ -167,8 +162,6 @@ class DirichletQLSearch(Pipe):
                 )
             )
 
-        if not self.materialize_index:
-            return bake()
         return CacheManager(
             self.index_cache_dir or _default_index_cache_dir()
         ).get_or_compute(
@@ -191,8 +184,6 @@ class DirichletQLSearch(Pipe):
                 .drop("__cr", "dl")
             )
 
-        if not self.materialize_index:
-            return build()
         return CacheManager(
             self.index_cache_dir or _default_index_cache_dir()
         ).get_or_compute(
@@ -202,14 +193,14 @@ class DirichletQLSearch(Pipe):
     def _transform(self, df: DataFrame, **kwargs) -> DataFrame:
         scored = self._scored_postings()
 
-        q_terms = df.select(
-            F.col(self.query_id).alias("query_id"),
-            F.explode(
-                F.array_distinct(tokens_expr(F.col(self.query_text)))
-            ).alias("term"),
+        q_terms = F.broadcast(
+            df.select(
+                F.col(self.query_id).alias("query_id"),
+                F.explode(
+                    F.array_distinct(tokens_expr(F.col(self.query_text)))
+                ).alias("term"),
+            )
         )
-        if self.broadcast_queries:
-            q_terms = F.broadcast(q_terms)
 
         # per-query in-vocabulary term count (the doc-norm multiplier);
         # the scored artifact's term set IS the vocabulary

@@ -109,13 +109,12 @@ class TrigramSubstringSearch(Pipe):
     (query_id, doc_id) for every corpus document whose text contains
     the pattern, identical to the naive scan.
 
-    ``materialize_index=True`` (default) builds the (gram, doc_id)
-    posting once per corpus fingerprint, range-clustered by gram, and
-    serves every later query batch from the Parquet artifact — the
-    pg_trgm index-size-for-query-speed tradeoff (the posting holds one
-    row per distinct (doc, trigram), several times the corpus text's
-    cardinality; disk is the cheap axis at 100 TB, repeated corpus
-    scans are not)."""
+    The (gram, doc_id) posting is built once per corpus fingerprint,
+    range-clustered by gram, and every later query batch is served from
+    the Parquet artifact — the pg_trgm index-size-for-query-speed
+    tradeoff (the posting holds one row per distinct (doc, trigram),
+    several times the corpus text's cardinality; disk is the cheap axis
+    at 100 TB, repeated corpus scans are not)."""
 
     def __init__(
         self,
@@ -125,9 +124,7 @@ class TrigramSubstringSearch(Pipe):
         query_id: str = "query_id",
         pattern_col: str = "pattern",
         prune_grams: int = 3,
-        materialize_index: bool = True,
         index_cache_dir: Optional[str] = None,
-        gram_pushdown_max: int = 4096,
         **kwargs,
     ):
         super().__init__(**kwargs)
@@ -145,16 +142,16 @@ class TrigramSubstringSearch(Pipe):
         # results — the verify pass is exact either way). 0 = use all
         # grams (the sweep's stress configuration).
         self.prune_grams = prune_grams
-        self.materialize_index = materialize_index
         self.index_cache_dir = index_cache_dir or trigram_cache_dir()
-        # when the batch's distinct selected grams fit on the driver,
-        # they also become a literal IN predicate on the posting scan —
-        # against the gram-sorted index Parquet that's row-group min/max
-        # pruning, the scan reads only the matched grams' slices. 0
-        # disables (the sweep's no-pushdown configuration).
-        self.gram_pushdown_max = gram_pushdown_max
 
     _no_fingerprint = ("corpus",)
+
+    # when the batch's distinct selected grams fit under this cap, they
+    # also become a literal IN predicate on the posting scan — against
+    # the gram-sorted index Parquet that's row-group min/max pruning, the
+    # scan reads only the matched grams' slices. Larger batches keep the
+    # full scan; tests set 0 to force that plan.
+    _GRAM_PUSHDOWN_MAX = 4096
 
     # dense-gate weight: measured sparse-aggregate-row vs pair-predicate
     # unit-cost ratio (see the strategy comment in _transform)
@@ -231,9 +228,7 @@ class TrigramSubstringSearch(Pipe):
             query_id=self.query_id,
             pattern_col=self.pattern_col,
             prune_grams=self.prune_grams,
-            materialize_index=self.materialize_index,
             index_cache_dir=self.index_cache_dir,
-            gram_pushdown_max=self.gram_pushdown_max,
         )
         eng._append_from = (self, new_docs)
         return eng
@@ -259,19 +254,17 @@ class TrigramSubstringSearch(Pipe):
         # inheriting the class attribute
         if getattr(self, "_append_from", None) is not None:
             # append pays ONLY its delta: the base engine's posting (its
-            # already-gram-clustered artifact when materialized) is
-            # UNIONED with a delta-only explode, and only the DELTA slice
-            # is materialized (keyed under the union corpus fingerprint,
-            # so chained appends and re-runs invalidate correctly). The
-            # old form re-ran repartitionByRange over base ∪ delta — a
+            # already-gram-clustered artifact) is UNIONED with a
+            # delta-only explode, and only the DELTA slice is
+            # materialized (keyed under the union corpus fingerprint, so
+            # chained appends and re-runs invalidate correctly). The old
+            # form re-ran repartitionByRange over base ∪ delta — a
             # full index-sized shuffle + rewrite per append, exactly the
             # corpus-proportional cost an incremental append exists to
             # avoid. Gram predicates (the literal-IN pushdown) push
             # through the Union into BOTH clustered scans, so row-group
             # pruning is preserved on each side.
             base_eng, delta = self._append_from
-            if not self.materialize_index:
-                return base_eng._posting().unionByName(explode(delta))
             # delta-sized shuffle: cluster just the new rows by gram
             delta_posting = CacheManager(self.index_cache_dir).get_or_compute(
                 self.corpus.sparkSession,
@@ -279,8 +272,6 @@ class TrigramSubstringSearch(Pipe):
                 lambda: clustered(delta),
             )
             return base_eng._posting().unionByName(delta_posting)
-        if not self.materialize_index:
-            return explode(self.corpus)
         # one-time corpus-sized shuffle to gram-cluster the index files;
         # every later batch reads back a pruned slice
         return CacheManager(self.index_cache_dir).get_or_compute(
@@ -297,8 +288,6 @@ class TrigramSubstringSearch(Pipe):
         def build() -> DataFrame:
             return posting.groupBy("gram").agg(F.count(F.lit(1)).alias("__df"))
 
-        if not self.materialize_index:
-            return build()
         return CacheManager(self.index_cache_dir).get_or_compute(
             self.corpus.sparkSession, self._index_fingerprint() + "_df", build
         )
@@ -311,8 +300,6 @@ class TrigramSubstringSearch(Pipe):
         def probe() -> int:
             return posting.select("doc_id").distinct().count()
 
-        if not self.materialize_index:
-            return probe()
         return CacheManager(self.index_cache_dir).meta_value(
             self._index_fingerprint() + "_df", "n_docs", probe
         )
@@ -375,11 +362,7 @@ class TrigramSubstringSearch(Pipe):
             F.count(F.lit(1)).alias("n_q"),
             *self._extra_outer_guard_aggs(),
         )
-        pushdown = bool(
-            self.materialize_index
-            and self.prune_grams
-            and self.gram_pushdown_max
-        )
+        pushdown = bool(self.prune_grams)
         if pushdown:
             # bounded by |queries| x prune_grams distinct grams; the
             # slice caps what reaches the driver. The same rows carry
@@ -391,7 +374,7 @@ class TrigramSubstringSearch(Pipe):
                     F.slice(
                         F.sort_array(F.collect_set("gram")),
                         1,
-                        self.gram_pushdown_max + 1,
+                        self._GRAM_PUSHDOWN_MAX + 1,
                     ).alias("__grams"),
                     F.sum("__df").alias("__fan"),
                 )
@@ -407,7 +390,7 @@ class TrigramSubstringSearch(Pipe):
                 " under-match)."
             )
         grams = list(plan_row["__grams"]) if pushdown else []
-        bounded = pushdown and len(grams) <= self.gram_pushdown_max
+        bounded = pushdown and len(grams) <= self._GRAM_PUSHDOWN_MAX
         # DENSE regime (the similarity/boolean engines' convention,
         # chosen per batch from exact scalars): when the candidate
         # fan-out Σ df(selected grams) approaches |queries| x |docs| —
@@ -538,7 +521,7 @@ class TrigramSimilaritySearch(Pipe):
       a corpus whose gram dfs are near-uniform, where nearly every
       (query, doc) pair shares a gram and the fan-out aggregate
       shuffles an order of magnitude more rows than there are pairs):
-      the batch's distinct grams (<= ``mask_grams_max``) get driver-
+      the batch's distinct grams (<= ``_MASK_GRAMS_MAX``) get driver-
       assigned bit positions; ONE bounded pass over the pruned posting
       packs each doc's queried-gram set into ceil(|grams|/64) longs,
       and the exact intersection is popcount(doc_mask & query_mask)
@@ -570,9 +553,7 @@ class TrigramSimilaritySearch(Pipe):
         corpus_text: str = "text",
         query_id: str = "query_id",
         pattern_col: str = "pattern",
-        materialize_index: bool = True,
         index_cache_dir: Optional[str] = None,
-        mask_grams_max: int = 4096,
         **kwargs,
     ):
         if not 0.0 < tau <= 1.0:
@@ -584,16 +565,16 @@ class TrigramSimilaritySearch(Pipe):
         self.corpus_text = corpus_text
         self.query_id = query_id
         self.pattern_col = pattern_col
-        self.materialize_index = materialize_index
         self.index_cache_dir = index_cache_dir or trigram_cache_dir()
-        # cap on the batch's DISTINCT gram count for (a) the literal-IN
-        # pushdown onto the gram-sorted index Parquet and (b) the dense
-        # regime's bitmask width (ceil(n/64) longs per doc). Batches
-        # with more distinct grams fall back to the sparse plan with no
-        # pushdown. 0 disables both.
-        self.mask_grams_max = mask_grams_max
 
     _no_fingerprint = ("corpus",)
+
+    # cap on the batch's DISTINCT gram count for (a) the literal-IN
+    # pushdown onto the gram-sorted index Parquet and (b) the dense
+    # regime's bitmask width (ceil(n/64) longs per doc). Batches with
+    # more distinct grams fall back to the sparse plan with no pushdown;
+    # tests set 0 to force that plan.
+    _MASK_GRAMS_MAX = 4096
 
     # share the posting/stats builders (and their cache keys) with the
     # substring engine — one index serves both operators
@@ -610,8 +591,6 @@ class TrigramSimilaritySearch(Pipe):
                 F.count(F.lit(1)).alias("__nd")
             )
 
-        if not self.materialize_index:
-            return build()
         return CacheManager(self.index_cache_dir).get_or_compute(
             self.corpus.sparkSession, self._index_fingerprint() + "_ndoc", build
         )
@@ -654,7 +633,7 @@ class TrigramSimilaritySearch(Pipe):
                     F.slice(
                         F.sort_array(F.collect_set("gram")),
                         1,
-                        self.mask_grams_max + 1,
+                        self._MASK_GRAMS_MAX + 1,
                     ).alias("__grams"),
                 )
             )
@@ -668,9 +647,7 @@ class TrigramSimilaritySearch(Pipe):
             hi = math.ceil(row["hi"] / self.tau)
             nd = nd.filter(F.col("__nd").between(lo, hi))
         grams = list(row["__grams"] or [])
-        bounded = bool(self.mask_grams_max) and (
-            len(grams) <= self.mask_grams_max
-        )
+        bounded = len(grams) <= self._MASK_GRAMS_MAX
         if bounded and grams:
             # literal IN on the gram-sorted index Parquet: row groups
             # outside the queried grams' slices are skipped by min/max
