@@ -497,6 +497,7 @@ def test_bm25_fan_est_collect_cap_falls_back(spark, tmp_path, monkeypatch):
     """``_fan_est`` collects a bounded share of the query-term rows; a
     batch over the cap takes the join probe, with the same fan-out and
     the same top-k rows."""
+    from warp_pipes_spark.io import BoundedCollect
     from warp_pipes_spark.search.bm25 import Bm25Search
 
     docs = spark.createDataFrame(
@@ -515,18 +516,25 @@ def test_bm25_fan_est_collect_cap_falls_back(spark, tmp_path, monkeypatch):
 
     collected = []
     frame_cls = type(qterms)  # the session's concrete DataFrame class
-    collect = frame_cls.collect
+    collect, to_arrow = frame_cls.collect, frame_cls.toArrow
 
     def spy(df):
         out = collect(df)
         collected.append(len(out))
         return out
 
-    monkeypatch.setattr(Bm25Search, "_FAN_EST_COLLECT_MAX_ROWS", 1)
+    def spy_arrow(df):
+        out = to_arrow(df)
+        collected.append(out.num_rows)
+        return out
+
+    monkeypatch.setattr(BoundedCollect, "MAX_ROWS", 1)
     monkeypatch.setattr(frame_cls, "collect", spy)
+    monkeypatch.setattr(frame_cls, "toArrow", spy_arrow)
     assert eng._fan_est(qterms, stats) == want == 3 + 0 + 2 + 1 + 1
     # a partial term collect (2 rows per partition at most, of 5), then
     # the one-row join probe
     assert len(collected) == 2 and collected[0] < 5 and collected[1] == 1
     monkeypatch.setattr(frame_cls, "collect", collect)
+    monkeypatch.setattr(frame_cls, "toArrow", to_arrow)
     assert sorted(map(tuple, eng(qs).collect())) == rows

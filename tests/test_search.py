@@ -966,3 +966,258 @@ def test_index_evaluates_query_batch_once(spark, tmp_path):
         3,
     )
     assert out and out == sorted(map(tuple, manual.collect()))
+
+
+def _serve_fixture(spark, tmp_path, n_docs=120):
+    """A BM25 + IVF pair over one small corpus, artifacts warmed."""
+    from warp_pipes_spark.ml.similarity import IvfCosineTopK
+    from warp_pipes_spark.search.bm25 import Bm25Search
+
+    words = [f"w{i}" for i in range(40)]
+    rng = np.random.RandomState(11)
+    docs = spark.createDataFrame(
+        [(i, " ".join(rng.choice(words, 8))) for i in range(n_docs)],
+        "doc_id long, text string",
+    )
+    vecs = spark.createDataFrame(
+        [(i, [float(x) for x in rng.randn(6)]) for i in range(n_docs)],
+        "vec_id long, embedding array<double>",
+    )
+    bm25 = Bm25Search(corpus=docs, k=5, index_cache_dir=str(tmp_path / "bm25"))
+    ivf = IvfCosineTopK(
+        corpus=vecs, k=5, n_centroids=6, n_probe=2, query_id="query_id",
+        exclude_self=False, centroid_cache_dir=str(tmp_path / "ivf_c"),
+        index_cache_dir=str(tmp_path / "ivf_i"),
+    )
+    warm = spark.createDataFrame(
+        [(0, "w1 w2", [1.0, 0.0, 0.0, 0.0, 0.0, 0.0])],
+        "query_id long, text string, embedding array<double>",
+    )
+    bm25(warm).collect()
+    ivf(warm).collect()
+    return words, docs, bm25, ivf
+
+
+def _query_batch(spark, words, n_q, seed, extra_words=()):
+    rng = np.random.RandomState(seed)
+    return spark.createDataFrame(
+        [
+            (q, " ".join(rng.choice(list(words) + list(extra_words), 3)),
+             [float(x) for x in rng.randn(6)])
+            for q in range(n_q)
+        ],
+        "query_id long, text string, embedding array<double>",
+    )
+
+
+def _local(spark, df):
+    """``df`` as a driver-local relation (what ``Index`` hands its engines)."""
+    return spark.createDataFrame(df.toArrow(), schema=df.schema)
+
+
+def test_index_serves_a_batch_in_at_most_seven_jobs(spark, tmp_path):
+    """A 16-query batch from a Python list, embedded by a pandas UDF,
+    through BM25 + IVF with RRF: the batch is collected once, the chain
+    runs over a local relation and its rows come back in one collect;
+    the caller's collect of the result runs no job."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from warp_pipes_spark.search.index import Index
+
+    words, docs, bm25, ivf = _serve_fixture(spark, tmp_path)
+    index = Index(
+        corpus=docs, engines=[bm25, ivf], k=5,
+        merge_previous_results=True, merge_strategy="rrf",
+    )
+    sc = spark.sparkContext
+    scored = sc.accumulator(0)
+
+    def embed(texts: pd.Series) -> pd.Series:
+        scored.add(len(texts))
+        return texts.map(lambda t: [float(len(w)) + (hash(w) % 7) for w in t.split()][:2] * 3)
+
+    def batch(seed):
+        raw = _query_batch(spark, words, 16, seed).drop("embedding")
+        return raw.withColumn("embedding", pandas_udf(embed, "array<double>")("text"))
+
+    index(batch(1)).collect()  # a warm serving path
+    scored.value = 0
+    group = "index_jobs_per_batch"
+    sc.setJobGroup(group, "one serving batch")
+    try:
+        rows = index(batch(2)).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 16 * 5
+    assert scored.value == 16
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7
+
+
+def _index_parity(spark, index, queries):
+    """Rows and schema of ``index(queries)`` equal the chain's plan over
+    the caller's frame."""
+    got = index(queries)
+    want = index._chain(queries)
+    assert got.schema == want.schema
+    rows = sorted(map(tuple, got.collect()))
+    assert rows == sorted(map(tuple, want.collect()))
+    return got, rows
+
+
+def test_index_local_batch_chains_match_the_plan(spark, tmp_path, monkeypatch):
+    """BM25 -> TopkSearch (q37's shape), one engine, BM25 + IVF under sum
+    and RRF, an empty batch and an over-cap batch (row cap monkeypatched
+    to 0): identical rows and schema to the chain over the caller's
+    frame; only a batch under the cap returns a local relation."""
+    from warp_pipes_spark.search.bm25 import Bm25Search
+    from warp_pipes_spark.search.index import Index
+    from warp_pipes_spark.search.topk import TopkSearch
+
+    words, docs, bm25, ivf = _serve_fixture(spark, tmp_path)
+    bm25_20 = Bm25Search(corpus=docs, k=20, index_cache_dir=str(tmp_path / "bm25"))
+    chains = [
+        Index(corpus=docs, engines=[bm25_20, TopkSearch(k=3)], k=3),
+        Index(corpus=docs, engines=[ivf], k=4),
+        Index(corpus=docs, engines=[bm25, ivf], k=5, merge_previous_results=True),
+        Index(corpus=docs, engines=[bm25, ivf, bm25], k=6, merge_previous_results=True,
+              merge_strategy="rrf", rrf_depth=7),
+    ]
+    queries = _query_batch(spark, words, 9, 5, extra_words=["oov"])
+    empty = queries.limit(0)
+    for index in chains:
+        got, rows = _index_parity(spark, index, queries)
+        assert rows and got.isLocal()
+        got, rows = _index_parity(spark, index, empty)
+        assert rows == [] and got.isLocal()
+    monkeypatch.setattr(Index, "_LOCAL_MAX_ROWS", 0)
+    for index in chains:
+        got, rows = _index_parity(spark, index, queries)
+        assert rows and not got.isLocal()
+
+
+def test_index_wide_batch_runs_the_chain_over_the_callers_frame(spark, tmp_path, monkeypatch):
+    """A batch under the row cap but over the byte budget (long texts)
+    is not served from a local relation; the rows are the same. A batch
+    over the cap evaluates the caller's frame twice: the bounded collect,
+    then the checkpoint every engine reads (no exact count)."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from warp_pipes_spark.search.index import Index
+
+    words, docs, bm25, ivf = _serve_fixture(spark, tmp_path)
+    index = Index(
+        corpus=docs, engines=[bm25, ivf], k=5,
+        merge_previous_results=True, merge_strategy="rrf",
+    )
+    evaluated = spark.sparkContext.accumulator(0)
+
+    def count_rows(s: pd.Series) -> pd.Series:
+        evaluated.add(len(s))
+        return s
+
+    narrow = _query_batch(spark, words, 8, 13)
+    wide = narrow.withColumn("body", F.expr("repeat('x', 65536)")).withColumn(
+        "text", pandas_udf(count_rows, "string")("text")
+    )
+    monkeypatch.setattr(Index, "_LOCAL_MAX_BYTES", 256 << 10)
+    assert index(narrow).isLocal()
+    got = index(wide)
+    assert not got.isLocal()
+    rows = sorted(map(tuple, got.collect()))
+    assert rows and rows == sorted(map(tuple, index._chain(narrow).collect()))
+    assert evaluated.value == 2 * 8
+
+
+def test_ivf_driver_probes_match_udf_probes(spark, tmp_path, monkeypatch):
+    """A local query batch probes its cells on the driver with the
+    memoized centroids (no pandas UDF on the query side) and returns the
+    rows the UDF probe returns."""
+    from warp_pipes_spark.ml.similarity import IvfCosineTopK
+
+    words, _docs, _bm25, ivf = _serve_fixture(spark, tmp_path)
+    queries = _query_batch(spark, words, 16, 7)
+    want = sorted(map(tuple, ivf(queries).collect()))
+
+    def no_udf(*_args, **_kwargs):
+        raise AssertionError("the local batch must not build the cell UDF")
+
+    monkeypatch.setattr(IvfCosineTopK, "_cell_udf", no_udf)
+    got = sorted(map(tuple, ivf(_local(spark, queries)).collect()))
+    assert got and got == want
+    assert ivf(_local(spark, queries.limit(0))).collect() == []
+
+
+def test_bm25_local_batch_exhaustive_matches_theta_prune(spark, tmp_path, monkeypatch):
+    """A serve-size local batch with a small fan-out skips the theta
+    prune; with the fan-out cut monkeypatched to 0 it takes the prune.
+    Both equal the prune over the caller's (non-local) frame."""
+    from warp_pipes_spark.search.bm25 import Bm25Search
+
+    words, _docs, bm25, _ivf = _serve_fixture(spark, tmp_path)
+    queries = _query_batch(spark, words, 16, 9, extra_words=["oov"]).drop("embedding")
+    pruned = []
+    prune = Bm25Search._transform_maxscore
+
+    def spy(self, *args, **kwargs):
+        pruned.append(1)
+        return prune(self, *args, **kwargs)
+
+    monkeypatch.setattr(Bm25Search, "_transform_maxscore", spy)
+    want = sorted(map(tuple, bm25(queries).collect()))
+    assert pruned == [1]
+    exhaustive = sorted(map(tuple, bm25(_local(spark, queries)).collect()))
+    assert pruned == [1]
+    monkeypatch.setattr(Bm25Search, "_EXHAUSTIVE_MAX_FAN_OUT", 0)
+    theta = sorted(map(tuple, bm25(_local(spark, queries)).collect()))
+    assert pruned == [1, 1]
+    assert want and exhaustive == want and theta == want
+
+
+def test_bounded_collect_caps_one_job_and_counts_skew(spark, monkeypatch):
+    """Under the cap: every row in one job. A partition over its share
+    (most rows in one of four partitions) is counted exactly before refusing, so a
+    skewed frame under the cap is still collected (with ``exact=False``
+    it is refused); over the cap: None.
+    BruteForce's pandas path keeps its over-cap ValueError."""
+    from warp_pipes_spark.io import BoundedCollect
+
+    even = spark.range(0, 40, 1, 4).selectExpr("id", "id * 2 AS v")
+    # 37 rows in the first of four partitions, one in each other
+    skewed = spark.range(0, 37, 1, 1).union(spark.range(37, 40, 1, 3)).selectExpr(
+        "id", "id * 2 AS v"
+    )
+    assert skewed.rdd.getNumPartitions() == 4
+    want = sorted(map(tuple, even.collect()))
+    for df in (even, skewed):
+        got = BoundedCollect.arrow(df, 40)
+        assert sorted(zip(*got.to_pydict().values())) == want
+        assert BoundedCollect.arrow(df, 39) is None
+    # without the exact count, a partition over its share refuses
+    assert BoundedCollect.arrow(skewed, 40, exact=False) is None
+    assert BoundedCollect.arrow(even, 40, exact=False) is not None
+    sc = spark.sparkContext
+    sc.setJobGroup("bounded_collect_jobs", "one bounded collect")
+    try:
+        BoundedCollect.arrow(even, 40)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(sc.statusTracker().getJobIdsForGroup("bounded_collect_jobs")) == 1
+    monkeypatch.setattr(BoundedCollect, "MAX_ROWS", 10)
+    assert BoundedCollect.arrow(even) is None
+
+    rng = np.random.RandomState(4)
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in rng.randn(4)]) for i in range(30)],
+        "vec_id long, embedding array<double>",
+    )
+    q = emb.filter("vec_id < 6").coalesce(1)
+    pandas = BruteForceCosineTopK(corpus=emb, k=3, strategy="pandas", max_query_rows=6)
+    join = BruteForceCosineTopK(corpus=emb, k=3)
+    def ranked(df):
+        return {(r["query_id"], r["rank"]): r["neighbor_id"] for r in df.collect()}
+
+    assert ranked(pandas(q)) == ranked(join(q))
+    with pytest.raises(ValueError, match="max_query_rows"):
+        BruteForceCosineTopK(corpus=emb, k=3, strategy="pandas", max_query_rows=5)(q).collect()

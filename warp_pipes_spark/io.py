@@ -84,6 +84,56 @@ def memo_on_snapshot(
     return value
 
 
+class BoundedCollect:
+    """A driver-side collect that holds at most ``MAX_ROWS`` rows (or the
+    caller's own cap), in ONE narrow job: every partition sends at most
+    its share of the cap, plus one row marking it as over. A ``limit``
+    collect would scan partitions in growing rounds, one job each. When a
+    partition overflows its share, an exact count decides (unless the
+    caller passes ``exact=False``), so a skewed frame under the cap is
+    still collected. The share needs the frame's partition count: for a
+    plan with a shuffle, AQE runs the map stages to find it, and the
+    collect runs them again."""
+
+    MAX_ROWS = 65_536
+
+    @classmethod
+    def arrow(cls, df: DataFrame, max_rows: Optional[int] = None, exact: bool = True):
+        """``df`` as a ``pyarrow.Table``, or None when it has more rows
+        than the cap. With ``exact=False``, also None when any partition
+        holds more than its share, without evaluating ``df`` again."""
+        import pyarrow.compute as pc
+
+        cap = cls.MAX_ROWS if max_rows is None else max_rows
+        share = max(1, cap // max(1, df.rdd.getNumPartitions()))
+        # the row's position within its partition: the low 33 bits of
+        # monotonically_increasing_id
+        pos = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
+        got = df.select("*", pos.alias("__pos")).where(F.col("__pos") <= share).toArrow()
+        if got.num_rows == 0 or pc.max(got["__pos"]).as_py() < share:
+            # no partition overflowed: this is every row
+            return got.drop_columns(["__pos"]) if got.num_rows <= cap else None
+        if not exact:
+            return None
+        return df.toArrow() if df.count() <= cap else None
+
+
+def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
+    """Driver-held ``rows`` (tuples in ``schema`` order) as a JVM
+    ``LocalRelation``: its scans run no Python task, and collecting a
+    projection of it runs no job. (``createDataFrame`` of a Python list
+    is a Python RDD, which pays a Python task on every scan.)"""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [[] for _ in arrow]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
 def read_parquet(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet(path)``, memoized per snapshot."""
     return memo_on_snapshot(spark, path, lambda: spark.read.parquet(path))

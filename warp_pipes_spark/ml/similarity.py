@@ -27,8 +27,10 @@ import numpy as np
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
 from warp_pipes_spark.core.pipe import Pipe
+from warp_pipes_spark.io import BoundedCollect, local_frame
 from warp_pipes_spark.pipes.cache import CacheManager
 
 
@@ -74,21 +76,20 @@ def _norm(a):
 
 
 def collect_bounded(df: DataFrame, max_rows: int, what: str) -> list:
-    """Enforce the bounded-query-batch contract BEFORE collecting: the
-    pandas-BLAS and PQ query paths broadcast the query matrix, which is
-    only sane for a bounded batch. The guard is a ``limit(max+1).count()``
-    probe (cheap — the scan stops at max_rows + 1), so a caller pointing a
-    corpus-sized table at the query side gets a clear error instead of a
-    driver OOM mid-collect."""
-    n = df.limit(max_rows + 1).count()
-    if n > max_rows:
+    """Enforce the bounded-query-batch contract: the pandas-BLAS and PQ
+    query paths broadcast the query matrix, which is only sane for a
+    bounded batch. One bounded collect (``io.BoundedCollect``) evaluates
+    the batch once, so a caller pointing a corpus-sized table at the query
+    side gets a clear error instead of a driver OOM mid-collect."""
+    got = BoundedCollect.arrow(df, max_rows)
+    if got is None:
         raise ValueError(
             f"{what}: query batch exceeds max_query_rows={max_rows} "
             f"(got > {max_rows} rows). The query side is collected and "
             "broadcast — point the CORPUS at the big table, or raise "
             "max_query_rows explicitly if the driver can hold the batch."
         )
-    return df.collect()
+    return got.to_pylist()
 
 
 def cosine_expr(a, b):
@@ -854,21 +855,29 @@ class IvfCosineTopK(Pipe):
             X, self.n_centroids, self.kmeans_iters, self.seed
         )
 
+    @staticmethod
+    def _nearest_cells(V: np.ndarray, centroids: np.ndarray, n_cells: int) -> np.ndarray:
+        """The ``n_cells`` nearest cells of each row of ``V``, by cosine.
+        The 'blas' kernel, shared by the pandas UDF and the driver-side
+        probe of a local query batch."""
+        V = V / np.linalg.norm(V, axis=1, keepdims=True)
+        sims = V @ centroids.T
+        # stable argsort: exact ties resolve to the LOWEST cell index,
+        # the same (sim DESC, cell ASC) order the 'expr' kernel and the
+        # DuckDB oracle use
+        return np.argsort(-sims, axis=1, kind="stable")[:, :n_cells].astype(np.int64)
+
     def _cell_udf(self, centroids: np.ndarray, n_cells: int):
         import pandas as pd
         from pyspark.sql.functions import pandas_udf
+
+        nearest = self._nearest_cells
 
         def cells(vecs):
             if len(vecs) == 0:
                 return pd.Series([], dtype=object)
             V = np.stack(vecs.to_numpy()).astype(np.float64)
-            V = V / np.linalg.norm(V, axis=1, keepdims=True)
-            sims = V @ centroids.T
-            # stable argsort: exact ties resolve to the LOWEST cell index,
-            # the same (sim DESC, cell ASC) order the 'expr' kernel and the
-            # DuckDB oracle use
-            top = np.argsort(-sims, axis=1, kind="stable")[:, :n_cells]
-            return pd.Series(list(top.astype(np.int64)))
+            return pd.Series(list(nearest(V, centroids, n_cells)))
 
         cells.__annotations__ = {"vecs": pd.Series, "return": pd.Series}
         return pandas_udf(cells, "array<long>")
@@ -940,14 +949,32 @@ class IvfCosineTopK(Pipe):
         )
         return manager.get_or_compute(self.corpus.sparkSession, fp, build)
 
+    def _local_probes(self, q: DataFrame, centroids: np.ndarray) -> DataFrame:
+        """``q`` (query_id, qv) of a local batch, as a new local relation
+        with each query's ``n_probe`` cells in ``__cells``."""
+        rows = q.collect()
+        V = np.array([r["qv"] for r in rows], dtype=np.float64)
+        cells = self._nearest_cells(V, centroids, self.n_probe).tolist() if rows else []
+        schema = StructType(
+            q.schema.fields + [StructField("__cells", ArrayType(LongType(), False))]
+        )
+        return local_frame(
+            q.sparkSession, [(*r, c) for r, c in zip(rows, cells)], schema
+        )
+
     def _transform(self, df: DataFrame, **kwargs) -> DataFrame:
         centroids = self._centroids()
         ce = self._assigned_corpus(centroids)
         q = df.select(
             F.col(self.query_id).alias("query_id"),
             F.col(self.query_vec).cast("array<double>").alias("qv"),
-        ).withColumn("qn", _norm(F.col("qv")))
-        if self.assign_family == "expr":
+        )
+        if self.assign_family == "blas" and df.isLocal():
+            # a driver-local batch: probe its cells here with the memoized
+            # centroids (collecting a projection of a local relation runs
+            # no job), so the query side runs no Python task
+            q, probe_cells = self._local_probes(q, centroids), F.col("__cells")
+        elif self.assign_family == "expr":
             probe_cells = F.transform(
                 F.slice(
                     self._sorted_cells_expr(centroids, F.col("qv")),
@@ -958,6 +985,7 @@ class IvfCosineTopK(Pipe):
             )
         else:
             probe_cells = self._cell_udf(centroids, self.n_probe)(F.col("qv"))
+        q = q.withColumn("qn", _norm(F.col("qv")))
         qe = F.broadcast(
             q.select("query_id", "qv", "qn", F.explode(probe_cells).alias("cell"))
         )

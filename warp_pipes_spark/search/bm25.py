@@ -29,6 +29,7 @@ from pyspark.storagelevel import StorageLevel
 
 from warp_pipes_spark.core.fingerprint import get_fingerprint
 from warp_pipes_spark.core.pipe import Pipe
+from warp_pipes_spark.io import BoundedCollect
 from warp_pipes_spark.pipes.cache import CacheManager
 from warp_pipes_spark.text.analysis import tokens_expr, tokens_sql
 
@@ -558,9 +559,12 @@ class Bm25Search(Pipe):
     # (~tens of MB at the cap); larger vocabularies keep the Spark-side
     # join probe. Module-level so tests can monkeypatch the threshold.
     _TERMDF_MAP_MAX_ROWS = 262_144
-    # cap on the query-term rows ``_fan_est`` collects to the driver; a
-    # larger batch keeps the join probe
-    _FAN_EST_COLLECT_MAX_ROWS = 65_536
+    # scoring fan-out (posting rows) up to which a driver-local batch is
+    # scored exhaustively instead of taking the theta prune. Over the
+    # serve benchmark's 800-document corpus (4 vCPU), exhaustive scoring
+    # cost about half the prune's CPU at 6k and 80k posting rows and the
+    # two met near 680k; the cut sits well under that crossing
+    _EXHAUSTIVE_MAX_FAN_OUT = 65_536
 
     def _termdf_map(self) -> "dict | None":
         """term -> df as a driver dict, read straight from the termdf
@@ -604,30 +608,32 @@ class Bm25Search(Pipe):
     def _fan_est(self, qterms: DataFrame, stats: DataFrame) -> int:
         """Exact scoring fan-out Σ df(t) over the batch's query-term
         rows — the strategy chooser's input. With the termdf dict
-        available the sum runs driver-side after one narrow collect of at
-        most ``_FAN_EST_COLLECT_MAX_ROWS`` (plus one per partition) term
-        rows (no join, no AQE shuffle stages); otherwise, or over that
-        cap, the vocabulary-sized join probe. Identical arithmetic: the
-        inner join drops unindexed terms = .get(t, 0), and duplicate term
-        rows (multi-leg queries) count once per row in both forms."""
+        available the sum runs driver-side after one bounded collect of
+        the term rows (``io.BoundedCollect``: one narrow job, no join, no
+        AQE shuffle stages); otherwise, or over the cap, the
+        vocabulary-sized join probe. Identical arithmetic: the inner join
+        drops unindexed terms = .get(t, 0), and duplicate term rows
+        (multi-leg queries) count once per row in both forms."""
         dfmap = self._termdf_map()
         if dfmap is not None:
-            # ONE narrow job (a ``limit`` collect scans partitions in
-            # growing rounds, a job each): every partition sends at most
-            # its share of the cap, plus one row marking it as over.
-            # ``pos`` is the row's position within its partition (the low
-            # 33 bits of monotonically_increasing_id)
-            n_parts = max(1, qterms.rdd.getNumPartitions())
-            share = max(1, self._FAN_EST_COLLECT_MAX_ROWS // n_parts)
-            pos = F.monotonically_increasing_id().bitwiseAND((1 << 33) - 1)
-            rows = (
-                qterms.select("term", pos.alias("pos"))
-                .where(F.col("pos") <= share)
-                .collect()
-            )
-            if all(r[1] < share for r in rows):
-                return sum(dfmap.get(r[0], 0) for r in rows)
+            terms = BoundedCollect.arrow(qterms.select("term"))
+            if terms is not None:
+                return sum(dfmap.get(t, 0) for t in terms.column("term").to_pylist())
         return qterms.join(stats, "term").agg(F.sum("df")).collect()[0][0] or 0
+
+    def _local_fan_est(self, df: DataFrame) -> "int | None":
+        """``_fan_est`` of a driver-local query batch, with no Spark job:
+        each leg's distinct terms are a projection of the local relation
+        (its collect runs no job), summed over the termdf dict. None
+        without the dict."""
+        dfmap = self._termdf_map()
+        if dfmap is None:
+            return None
+        legs = [self.query_text] + ([self.aux_text_col] if self.aux_text_col else [])
+        rows = df.select(
+            *[F.array_distinct(tokens_expr(F.col(c))) for c in legs]
+        ).collect()
+        return sum(dfmap.get(t, 0) for r in rows for terms in r if terms for t in terms)
 
     def _term_stats(self, postings: DataFrame) -> DataFrame:
         """Per-term document frequency ``(term, df)`` — the vocabulary-sized
@@ -646,7 +652,9 @@ class Bm25Search(Pipe):
             self.corpus.sparkSession, self._index_fingerprint() + "_termdf", build
         )
 
-    def _transform_maxscore(self, df: DataFrame, postings: DataFrame) -> DataFrame:
+    def _transform_maxscore(
+        self, df: DataFrame, postings: DataFrame, fan_est: "int | None" = None
+    ) -> DataFrame:
         """Top-k retrieval with champion-seeded threshold pruning — the
         initial-threshold idea of the MaxScore/WAND family (Turtle & Flood
         1995; Broder et al. 2003), adapted to a shuffle engine:
@@ -758,7 +766,8 @@ class Bm25Search(Pipe):
         # counts the true fan-out across legs
         stats = self._term_stats(postings)
         n_postings = self._n_postings(stats)
-        fan_est = self._fan_est(qterms, stats)
+        if fan_est is None:
+            fan_est = self._fan_est(qterms, stats)
         doc_major = fan_est > n_postings
 
         if single_leg:
@@ -864,7 +873,12 @@ class Bm25Search(Pipe):
         # + weight + sum + window — no corpus pass at all
         postings = self._index()
         if self._maxscore_eligible():
-            return self._transform_maxscore(df, postings)
+            # a driver-local batch with a small exact fan-out skips the
+            # prune: scoring every posting row costs less than the prune's
+            # seed pass, and the exhaustive plan is bit-identical
+            fan_est = self._local_fan_est(df) if df.isLocal() else None
+            if fan_est is None or fan_est > self._EXHAUSTIVE_MAX_FAN_OUT:
+                return self._transform_maxscore(df, postings, fan_est)
         parts = [self._scored(df, self.query_text, 1.0, postings)]
         if self.aux_text_col:
             aux_w = (
