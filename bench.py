@@ -1,11 +1,12 @@
 #!/usr/bin/env python
 """Benchmark harness: runs the full query catalog at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-SHORT JSON line with the headline totals:
+SHORT JSON line with the headline totals, last on standard output:
 {"metric": ..., "value": total_sec, "unit": "sec", "value_r01_subset": ...,
-"sf": ..., "n_queries": ...}. The per-query timing map (149 entries — too
-large for the driver's bounded stdout capture, which truncated the public
-artifact in rounds 2-3) is written to BENCH_DETAIL.json next to this file.
+"sf": ..., "n_queries": ...}. Before it comes one compact per-query line,
+{"per_query_ds": {name: deciseconds}}; the full per-query timing map
+(seconds, plus any failures) is written to BENCH_DETAIL.json next to this
+file.
 
 Each query is timed to FULL materialization through Spark's no-op batch
 sink (df.write.format("noop")): every output column is computed and
@@ -131,6 +132,12 @@ def main() -> None:
     )
     with open(detail_path, "w") as fh:
         json.dump(detail, fh, indent=1, sort_keys=True)
+    # one compact per-query line (integer deciseconds) so a scale run can
+    # be read per query from stdout alone
+    print(json.dumps(
+        {"per_query_ds": {n: round(t * 10) for n, t in timings.items()}},
+        separators=(",", ":"),
+    ))
     # the short totals line goes LAST on stdout so a tail capture keeps it
     print(json.dumps(out))
 

@@ -12,26 +12,13 @@ from __future__ import annotations
 
 import os
 import weakref
-from typing import Any, Callable, Dict, Hashable, Iterable, Optional
+from typing import Any, Callable, Dict, Hashable, Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from warp_pipes_spark.core.fingerprint import snapshot_token
-
-TESTDATA_TABLES = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
 
 # natural stable keys in the driver testdata
 NATURAL_KEYS: Dict[str, str] = {
@@ -168,18 +155,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str, row_id: bool = False
 
     # every catalog query re-opens its base tables here (250 T() sites)
     return memo_on_snapshot(spark, path, build, tag=("load_table", row_id))
-
-
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: Iterable[str] = TESTDATA_TABLES
-) -> Dict[str, DataFrame]:
-    return {n: load_table(spark, sf_dir, n) for n in names}
-
-
-def register_views(spark: SparkSession, sf_dir: str, names: Iterable[str] = TESTDATA_TABLES) -> None:
-    """Register each testdata table as a temp view for spark.sql use."""
-    for n in names:
-        load_table(spark, sf_dir, n).createOrReplaceTempView(n)
 
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by=None) -> None:

@@ -362,17 +362,6 @@ class EpochShuffle(Pipe):
 # ---------------------------------------------------------------------------
 
 
-def deterministic_sample_sql(
-    table: str, fraction: float, key: str = "doc_id", seed: int = 0,
-    columns: str = "*",
-) -> str:
-    gate = _gate_sql(key, seed)
-    return (
-        f"SELECT {columns} FROM {table} "
-        f"WHERE {gate} < '{_threshold_hex(fraction)}'"
-    )
-
-
 def stratified_sample_sql(
     table: str,
     fractions: Dict[str, float],

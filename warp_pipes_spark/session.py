@@ -47,6 +47,23 @@ def get_spark(
         # Arrow for pandas UDF / mapInPandas hot paths
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
+        # generated-class cache: a plan whose Java source was compiled
+        # before reuses the class instead of Janino-compiling it again
+        # (and C2 re-JIT-compiling the new bytecode). Measured working
+        # sets (distinct classes, perfbench seed 101, 4 vCPU): one
+        # 120-document curate pass 116; serve set-up 170 and each
+        # 16-query batch 63; one bench.py catalog run at sf0.001 3,445.
+        # Guava splits the cap over 4 segments that evict on their own,
+        # so at Spark's default of 100 every curate pass recompiled 103
+        # of its 116 classes. 1,000 gives each segment 250 slots against
+        # an expected 58 of the largest repeated working set (serve, at
+        # most 233): a repeated pass compiles nothing. The catalog run
+        # does not fit and compiles 3,720 classes (5,273 at 100), the
+        # price of keeping the cache at about 5 MB: each cached class
+        # pins 4-5 KB of metaspace through its class loader. Static and
+        # JVM-wide, read when the first class is generated: a session
+        # built outside this factory keeps Spark's 100.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
         # keep driver output deterministic for tests
         .config("spark.sql.session.timeZone", "UTC")
         # local mode: the driver heap IS the executor heap for all worker
