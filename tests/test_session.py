@@ -1,7 +1,33 @@
-"""The session factory's codegen-cache sizing: a plan whose generated Java
-source was compiled before reuses the cached class."""
+"""The session factory's sizing: the driver heap follows the host's memory,
+and a plan whose generated Java source was compiled before reuses the cached
+class."""
+
+import os
 
 from pyspark.sql import functions as F
+
+from warp_pipes_spark.session import driver_mem
+
+
+def _heap_on_host(monkeypatch, phys_gb: int) -> str:
+    page = 4096
+    pages = {"SC_PAGE_SIZE": page, "SC_PHYS_PAGES": phys_gb * 2**30 // page}
+    monkeypatch.setattr(os, "sysconf", pages.__getitem__)
+    return driver_mem()
+
+
+def test_driver_heap_is_a_quarter_of_memory_capped_at_24g(monkeypatch):
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    assert _heap_on_host(monkeypatch, 16) == "4096m"
+    assert _heap_on_host(monkeypatch, 96) == "24g"
+    assert _heap_on_host(monkeypatch, 256) == "24g"
+    monkeypatch.setenv("SPARK_GRAFT_DRIVER_MEM", "6g")
+    assert _heap_on_host(monkeypatch, 16) == "6g"
+    assert _heap_on_host(monkeypatch, 256) == "6g"
+
+
+def test_session_takes_its_heap_from_the_rule(spark):
+    assert spark.sparkContext.getConf().get("spark.driver.memory") == driver_mem()
 
 
 def _janino_compiles(spark) -> int:

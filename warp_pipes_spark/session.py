@@ -14,6 +14,15 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def driver_mem() -> str:
+    """The driver heap: ``SPARK_GRAFT_DRIVER_MEM`` when set, else the
+    smaller of 24g and a quarter of physical memory."""
+    if mem := os.environ.get("SPARK_GRAFT_DRIVER_MEM"):
+        return mem
+    quarter_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 4 // 2**20
+    return "24g" if quarter_mb >= 24 * 1024 else f"{quarter_mb}m"
+
+
 def get_spark(
     app_name: str = "warp-pipes-spark",
     master: str | None = None,
@@ -67,8 +76,13 @@ def get_spark(
         # keep driver output deterministic for tests
         .config("spark.sql.session.timeZone", "UTC")
         # local mode: the driver heap IS the executor heap for all worker
-        # threads — size it for 32 concurrent tasks, not for a driver
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # threads, and the only bound on the engine's memory. A cap above
+        # physical memory never makes the JVM collect: it grows until the
+        # kernel's OOM killer takes it. So the heap is the smaller of 24g
+        # (hosts of 96 GB and more) and a quarter of physical memory: the
+        # JDK's own default maximum heap (MaxRAMPercentage=25), and the
+        # rule perfbench sets for itself. SPARK_GRAFT_DRIVER_MEM overrides it.
+        .config("spark.driver.memory", driver_mem())
         .config("spark.ui.enabled", "false")
         # managed-table warehouse (bucketed tables) kept out of the repo
         .config(
