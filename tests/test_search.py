@@ -968,20 +968,23 @@ def test_index_evaluates_query_batch_once(spark, tmp_path):
     assert out and out == sorted(map(tuple, manual.collect()))
 
 
-def _serve_fixture(spark, tmp_path, n_docs=120):
-    """A BM25 + IVF pair over one small corpus, artifacts warmed."""
+def _serve_fixture(spark, tmp_path, n_docs=120, n_dups=0):
+    """A BM25 + IVF pair over one small corpus, artifacts warmed. The
+    last ``n_dups`` documents repeat the text and vector of the first
+    ``n_dups`` under new ids (tied scores)."""
     from warp_pipes_spark.ml.similarity import IvfCosineTopK
     from warp_pipes_spark.search.bm25 import Bm25Search
 
-    words = [f"w{i}" for i in range(40)]
+    # letters only: the tokenizer splits on anything outside [a-z]
+    words = [f"w{chr(97 + i // 26)}{chr(97 + i % 26)}" for i in range(40)]
     rng = np.random.RandomState(11)
-    docs = spark.createDataFrame(
-        [(i, " ".join(rng.choice(words, 8))) for i in range(n_docs)],
-        "doc_id long, text string",
-    )
+    texts = [" ".join(rng.choice(words, 8)) for _ in range(n_docs)]
+    embeddings = [[float(x) for x in rng.randn(6)] for _ in range(n_docs)]
+    texts += texts[:n_dups]
+    embeddings += embeddings[:n_dups]
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
     vecs = spark.createDataFrame(
-        [(i, [float(x) for x in rng.randn(6)]) for i in range(n_docs)],
-        "vec_id long, embedding array<double>",
+        list(enumerate(embeddings)), "vec_id long, embedding array<double>"
     )
     bm25 = Bm25Search(corpus=docs, k=5, index_cache_dir=str(tmp_path / "bm25"))
     ivf = IvfCosineTopK(
@@ -990,7 +993,7 @@ def _serve_fixture(spark, tmp_path, n_docs=120):
         index_cache_dir=str(tmp_path / "ivf_i"),
     )
     warm = spark.createDataFrame(
-        [(0, "w1 w2", [1.0, 0.0, 0.0, 0.0, 0.0, 0.0])],
+        [(0, f"{words[1]} {words[2]}", [1.0, 0.0, 0.0, 0.0, 0.0, 0.0])],
         "query_id long, text string, embedding array<double>",
     )
     bm25(warm).collect()
@@ -1067,14 +1070,20 @@ def _index_parity(spark, index, queries):
 
 def test_index_local_batch_chains_match_the_plan(spark, tmp_path, monkeypatch):
     """BM25 -> TopkSearch (q37's shape), one engine, BM25 + IVF under sum
-    and RRF, an empty batch and an over-cap batch (row cap monkeypatched
-    to 0): identical rows and schema to the chain over the caller's
-    frame; only a batch under the cap returns a local relation."""
+    and RRF, and an empty batch: answered on the driver from the index
+    artifacts, then again through the Spark chain over the local
+    relation (driver artifact reads capped at 0), then over the caller's
+    frame (row cap 0). Every run has the rows and schema of the chain
+    over the caller's frame. The batch holds a query of only unindexed
+    terms, a NULL and an empty text, tied scores from duplicate
+    documents, and a query whose probed cells hold no vectors."""
+    from warp_pipes_spark.io import DriverArtifact
+    from warp_pipes_spark.ml.similarity import IvfCosineTopK
     from warp_pipes_spark.search.bm25 import Bm25Search
     from warp_pipes_spark.search.index import Index
     from warp_pipes_spark.search.topk import TopkSearch
 
-    words, docs, bm25, ivf = _serve_fixture(spark, tmp_path)
+    words, docs, bm25, ivf = _serve_fixture(spark, tmp_path, n_dups=4)
     bm25_20 = Bm25Search(corpus=docs, k=20, index_cache_dir=str(tmp_path / "bm25"))
     chains = [
         Index(corpus=docs, engines=[bm25_20, TopkSearch(k=3)], k=3),
@@ -1083,17 +1092,135 @@ def test_index_local_batch_chains_match_the_plan(spark, tmp_path, monkeypatch):
         Index(corpus=docs, engines=[bm25, ivf, bm25], k=6, merge_previous_results=True,
               merge_strategy="rrf", rrf_depth=7),
     ]
-    queries = _query_batch(spark, words, 9, 5, extra_words=["oov"])
+    # two centroids no list row belongs to (the lists were assigned
+    # before): a query between them probes only empty cells
+    base = ivf._centroids()
+    far = np.eye(6)[0] + 0.01 * np.eye(6)[1]
+    cells = np.vstack([base, np.eye(6)[0], far / np.linalg.norm(far)])
+    monkeypatch.setattr(IvfCosineTopK, "_centroids", lambda self: cells)
+    dup = docs.where("doc_id = 1").first()["text"]
+    dup_vec = ivf.corpus.where("vec_id = 2").first()["embedding"]
+    edge = spark.createDataFrame(
+        [
+            (100, "oov unseen", [0.5, -1.0, 0.25, 0.0, 1.0, -0.5]),
+            (101, None, [1.0, 2.0, 0.0, -1.0, 0.5, 0.0]),
+            (102, "", [0.0, 1.0, 1.0, 0.0, -1.0, 2.0]),
+            (103, dup, dup_vec),
+            (104, f"{words[3]} {words[7]}", [1.0, 0.0, 0.0, 0.0, 0.0, 0.0]),
+        ],
+        "query_id long, text string, embedding array<double>",
+    )
+    queries = _query_batch(spark, words, 9, 5, extra_words=["oov"]).unionByName(edge)
     empty = queries.limit(0)
+    local = _local(spark, queries)
     for index in chains:
+        assert index._driver_chain(local) is not None
         got, rows = _index_parity(spark, index, queries)
         assert rows and got.isLocal()
         got, rows = _index_parity(spark, index, empty)
         assert rows == [] and got.isLocal()
+    # the duplicates tie, and the tie breaks on the lower id
+    top = sorted(tuple(r)[1:] for r in ivf(queries).collect() if r["query_id"] == 103)
+    assert top[:2] == [(1, 2, 1.0), (2, 122, 1.0)]
+    top = {r["idx"]: r for r in bm25_20(queries).collect() if r["query_id"] == 103}
+    assert top[1]["score"] == top[121]["score"] and top[1]["rank"] < top[121]["rank"]
+    assert not [r for r in ivf(queries).collect() if r["query_id"] == 104]
+    monkeypatch.setattr(DriverArtifact, "MAX_VALUES", 0)
+    for index in chains:
+        assert index._driver_chain(local) is None
+        got, rows = _index_parity(spark, index, queries)
+        assert rows and got.isLocal()
     monkeypatch.setattr(Index, "_LOCAL_MAX_ROWS", 0)
     for index in chains:
         got, rows = _index_parity(spark, index, queries)
         assert rows and not got.isLocal()
+
+
+def test_index_answers_a_local_batch_in_one_job(spark, tmp_path):
+    """A 16-query batch from a Python list, embedded by a pandas UDF,
+    through BM25 + IVF with RRF: the batch collect is the only Spark job
+    (its one evaluation of the UDF is the only Python work); the engines
+    and the fusion answer on the driver, and the caller's collect of the
+    result runs no job."""
+    import pandas as pd
+    from pyspark.sql.functions import pandas_udf
+
+    from warp_pipes_spark.search.index import Index
+
+    words, docs, bm25, ivf = _serve_fixture(spark, tmp_path)
+    index = Index(
+        corpus=docs, engines=[bm25, ivf], k=5,
+        merge_previous_results=True, merge_strategy="rrf",
+    )
+    sc = spark.sparkContext
+    scored = sc.accumulator(0)
+
+    def embed(texts: pd.Series) -> pd.Series:
+        scored.add(len(texts))
+        return texts.map(lambda t: [float(len(w)) + (hash(w) % 7) for w in t.split()][:2] * 3)
+
+    def batch(seed):
+        raw = _query_batch(spark, words, 16, seed).drop("embedding")
+        return raw.withColumn("embedding", pandas_udf(embed, "array<double>")("text"))
+
+    index(batch(1)).collect()  # a warm serving path
+    scored.value = 0
+    group = "index_jobs_per_local_batch"
+    sc.setJobGroup(group, "one serving batch")
+    try:
+        rows = index(batch(2)).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 16 * 5
+    assert scored.value == 16
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+
+
+def test_index_local_batch_falls_back_to_the_spark_chain(spark, tmp_path, monkeypatch):
+    """A chain with an engine that has no driver kernel (QL), a BM25
+    with an aux text or a term filter, a fan-out over the exhaustive
+    cut, or a BM25 index without its termdf artifact: the batch runs
+    the Spark chain over the local relation, with the rows of the chain
+    over the caller's frame."""
+    import shutil
+
+    from warp_pipes_spark.pipes.cache import CacheManager
+    from warp_pipes_spark.search.bm25 import Bm25Search
+    from warp_pipes_spark.search.index import Index
+    from warp_pipes_spark.search.ql import DirichletQLSearch
+
+    words, docs, bm25, ivf = _serve_fixture(spark, tmp_path)
+    docs = docs.withColumn("lang", F.expr("IF(doc_id % 2 = 0, 'en', 'de')"))
+    queries = _query_batch(spark, words, 8, 17).withColumn(
+        "aux", F.lit(f"{words[1]} {words[2]}")
+    ).withColumn("lang", F.expr("IF(query_id % 3 = 0, 'de', 'en')"))
+    local = _local(spark, queries)
+
+    def index_of(engine):
+        return Index(
+            corpus=docs, engines=[engine, ivf], k=5,
+            merge_previous_results=True, merge_strategy="rrf",
+        )
+
+    def served_by_the_spark_chain(index):
+        assert index._driver_chain(local) is None
+        got, rows = _index_parity(spark, index, queries)
+        assert rows and got.isLocal()
+
+    cache = str(tmp_path / "fallback")
+    served_by_the_spark_chain(index_of(DirichletQLSearch(corpus=docs, k=5, index_cache_dir=cache)))
+    served_by_the_spark_chain(index_of(Bm25Search(
+        corpus=docs, k=5, aux_text_col="aux", index_cache_dir=cache)))
+    served_by_the_spark_chain(index_of(Bm25Search(
+        corpus=docs, k=5, filter_key="lang", index_cache_dir=cache)))
+    with monkeypatch.context() as m:
+        m.setattr(Bm25Search, "_EXHAUSTIVE_MAX_FAN_OUT", 0)
+        served_by_the_spark_chain(index_of(bm25))
+    index = index_of(bm25)
+    assert index._driver_chain(local) is not None
+    termdf = CacheManager(bm25.index_cache_dir).path_for(bm25._index_fingerprint() + "_termdf")
+    shutil.rmtree(termdf)
+    served_by_the_spark_chain(index)
 
 
 def test_index_wide_batch_runs_the_chain_over_the_callers_frame(spark, tmp_path, monkeypatch):
@@ -1173,6 +1300,32 @@ def test_bm25_local_batch_exhaustive_matches_theta_prune(spark, tmp_path, monkey
     theta = sorted(map(tuple, bm25(_local(spark, queries)).collect()))
     assert pruned == [1, 1]
     assert want and exhaustive == want and theta == want
+
+
+def test_decimal_units_match_spark_cast(spark):
+    """The driver twin of CAST(double AS DECIMAL(18,6)) equals Spark's
+    cast over a local relation, on values of every magnitude and sign,
+    on exact halves and on the doubles a few ulps either side of a half
+    (where the JVM's decimal string decides the rounding); values Spark
+    cannot cast give None."""
+    import pyarrow as pa
+
+    from warp_pipes_spark.core.driver import decimal_units
+
+    rng = np.random.RandomState(7)
+    magnitudes = (rng.rand(4000) * 2 - 1) * 10.0 ** rng.randint(-8, 12, 4000)
+    halves = (rng.randint(0, 10**9, 2000) + 0.5) / 1e6
+    near = [x for h in halves[:500] for x in (np.nextafter(h, 0), np.nextafter(h, 2e12))]
+    named = [1.0000005, 0.1234565, 2.5e-7, -1.0000005, -2.5e-7, 0.0, 99999999999.9999995]
+    values = np.concatenate([magnitudes, halves, -halves, near, named])
+    frame = spark.createDataFrame(pa.table({"d": values}))
+    want = [
+        int(r[0].scaleb(6))
+        for r in frame.select(F.col("d").cast("decimal(18,6)")).collect()
+    ]
+    assert decimal_units(values, spark).tolist() == want
+    for bad in (1e12, -1e12, float("nan"), float("inf")):
+        assert decimal_units(np.array([0.5, bad]), spark) is None
 
 
 def test_bounded_collect_caps_one_job_and_counts_skew(spark, monkeypatch):

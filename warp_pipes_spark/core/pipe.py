@@ -58,7 +58,6 @@ class Pipe:
         filtered = self._filter_input(df)
         out = self._transform(filtered, **kwargs)
         if self.update:
-            new = [c for c in out.columns if c not in df.columns]
             if out is filtered or set(df.columns) <= set(out.columns):
                 return out if out is not filtered else df
             raise ValueError(

@@ -105,6 +105,57 @@ class BoundedCollect:
         return df.toArrow() if df.count() <= cap else None
 
 
+class DriverArtifact:
+    """A published Parquet artifact read on the driver with pyarrow, with
+    no Spark job. At most ``MAX_VALUES`` leaf values of the columns read
+    (a BM25 posting is 3, an IVF list row dim + 3), counted from the
+    files' footers before any data is read: 4M values is 32 MB of
+    numbers. The prepared value is memoized per artifact snapshot."""
+
+    MAX_VALUES = 1 << 22
+
+    @classmethod
+    def read(
+        cls,
+        spark: SparkSession,
+        path: str,
+        columns: list,
+        prepare: Callable[[Any], Any],
+        tag: Hashable,
+        max_values: Optional[int] = None,
+    ) -> Any:
+        """``prepare(table)`` of ``columns`` of the artifact at ``path``,
+        memoized on its snapshot; None when the artifact is missing,
+        unreadable or over the cap."""
+        cap = cls.MAX_VALUES if max_values is None else max_values
+
+        def build() -> Any:
+            import glob
+
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+
+            files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+            try:
+                n = 0
+                for f in files:
+                    meta = pq.read_metadata(f)
+                    for g in range(meta.num_row_groups):
+                        group = meta.row_group(g)
+                        for c in range(group.num_columns):
+                            chunk = group.column(c)
+                            if chunk.path_in_schema.split(".")[0] in columns:
+                                n += chunk.num_values
+                if not files or n > cap:
+                    return None
+                table = pa.concat_tables(pq.read_table(f, columns=columns) for f in files)
+            except (OSError, pa.ArrowException):
+                return None
+            return prepare(table)
+
+        return memo_on_snapshot(spark, path, build, tag=(tag, tuple(columns), cap))
+
+
 def local_frame(spark: SparkSession, rows: list, schema: T.StructType) -> DataFrame:
     """Driver-held ``rows`` (tuples in ``schema`` order) as a JVM
     ``LocalRelation``: its scans run no Python task, and collecting a

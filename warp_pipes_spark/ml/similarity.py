@@ -29,8 +29,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
+from warp_pipes_spark.core.driver import decimal_units, ranked
 from warp_pipes_spark.core.pipe import Pipe
-from warp_pipes_spark.io import BoundedCollect, local_frame
+from warp_pipes_spark.io import BoundedCollect, DriverArtifact, local_frame
 from warp_pipes_spark.pipes.cache import CacheManager
 
 
@@ -763,6 +764,11 @@ class IvfCosineTopK(Pipe):
 
     _no_fingerprint = ("corpus", "centroid_cache_dir", "index_cache_dir")
 
+    # query x candidate pairs a driver-local batch may score on the
+    # driver: a 16-query serve batch scores about 3,200; a million pairs
+    # is 8 MB per array, with the dot product's time linear in dim
+    _DRIVER_MAX_PAIRS = 1 << 20
+
     def _centroids(self) -> np.ndarray:
         """Trained centroids, served from a fingerprint-keyed cache — the
         same index-once-query-many contract as the BM25 postings and the
@@ -901,27 +907,8 @@ class IvfCosineTopK(Pipe):
         ]
         return F.array_sort(F.array(*structs))
 
-    def _assigned_corpus(self, centroids) -> DataFrame:
-        """The IVF list structure: (neighbor_id, cell, cv, cn), served from
-        a fingerprint-keyed Parquet cache — the faiss ``add()`` output made
-        a table. Assigning the corpus is the expensive per-call pass (one
-        BLAS matmul over EVERY corpus vector); materializing it completes
-        the index-once-query-many contract the BM25 postings and the
-        k-means centroids already follow. At cluster scale, write this
-        partitioned by ``cell`` so an n_probe query reads only its lists."""
-        def build() -> DataFrame:
-            c = self.corpus.select(
-                F.col(self.corpus_id).alias("neighbor_id"),
-                F.col(self.corpus_vec).cast("array<double>").alias("cv"),
-            ).withColumn("cn", _norm(F.col("cv")))
-            if self.assign_family == "expr":
-                cell = F.element_at(
-                    self._sorted_cells_expr(centroids, F.col("cv")), 1
-                )["cell"]
-            else:
-                cell = self._cell_udf(centroids, 1)(F.col("cv"))[0]
-            return c.withColumn("cell", cell)
-
+    def _lists_artifact(self) -> tuple:
+        """(manager, fingerprint) of the ``_assigned_corpus`` artifact."""
         import os
         import tempfile
 
@@ -947,7 +934,140 @@ class IvfCosineTopK(Pipe):
                 "assign": self.assign_family,
             }
         )
+        return manager, fp
+
+    def _assigned_corpus(self, centroids) -> DataFrame:
+        """The IVF list structure: (neighbor_id, cell, cv, cn), served from
+        a fingerprint-keyed Parquet cache — the faiss ``add()`` output made
+        a table. Assigning the corpus is the expensive per-call pass (one
+        BLAS matmul over EVERY corpus vector); materializing it completes
+        the index-once-query-many contract the BM25 postings and the
+        k-means centroids already follow. At cluster scale, write this
+        partitioned by ``cell`` so an n_probe query reads only its lists."""
+        def build() -> DataFrame:
+            c = self.corpus.select(
+                F.col(self.corpus_id).alias("neighbor_id"),
+                F.col(self.corpus_vec).cast("array<double>").alias("cv"),
+            ).withColumn("cn", _norm(F.col("cv")))
+            if self.assign_family == "expr":
+                cell = F.element_at(
+                    self._sorted_cells_expr(centroids, F.col("cv")), 1
+                )["cell"]
+            else:
+                cell = self._cell_udf(centroids, 1)(F.col("cv"))[0]
+            return c.withColumn("cell", cell)
+
+        manager, fp = self._lists_artifact()
         return manager.get_or_compute(self.corpus.sparkSession, fp, build)
+
+    def _driver_lists(self):
+        """The IVF lists as driver arrays, memoized per snapshot:
+        ``(span, neighbor_ids, cvt, cn)`` with the rows grouped by cell,
+        ``span`` mapping a cell to its [lo, hi) rows and ``cvt`` the
+        vectors as a (dim, rows) matrix. None when ``io.DriverArtifact``
+        declines the read or a list row is NULL, ragged or has a
+        non-integer id."""
+        import pyarrow as pa
+        import pyarrow.compute as pc
+
+        manager, fp = self._lists_artifact()
+        if not manager.exists(fp):
+            return None
+
+        def prepare(t):
+            if t.num_rows == 0:
+                return None
+            t = t.combine_chunks()
+            nid, cell, cv, cn = (t.column(c).chunk(0) for c in ("neighbor_id", "cell", "cv", "cn"))
+            if not pa.types.is_integer(nid.type):
+                return None
+            vals = cv.flatten()
+            lens = pc.list_value_length(cv).to_numpy(zero_copy_only=False)
+            if (
+                any(a.null_count for a in (nid, cell, cv, cn, vals))
+                or (lens != lens[0]).any()
+            ):
+                return None
+            cells = cell.to_numpy()
+            order = np.argsort(cells, kind="stable")
+            keys, lo, counts = np.unique(cells[order], return_index=True, return_counts=True)
+            span = dict(zip(keys.tolist(), zip(lo.tolist(), (lo + counts).tolist())))
+            vecs = vals.to_numpy().reshape(len(cells), int(lens[0]))[order]
+            return (span, nid.to_numpy()[order], np.ascontiguousarray(vecs.T),
+                    cn.to_numpy()[order])
+
+        return DriverArtifact.read(
+            self.corpus.sparkSession, manager.path_for(fp),
+            ["neighbor_id", "cell", "cv", "cn"], prepare, tag="ivf_driver_lists",
+        )
+
+    def _driver_topk(self, df: DataFrame) -> "dict | None":
+        """The engine's top-k of a driver-local batch computed on the
+        driver, ``{query_id: [(neighbor_id, score), ...]}`` in rank order:
+        each query probes its cells with the memoized centroids, its
+        candidates come from ``_driver_lists``, and every score is
+        ``_transform``'s expression evaluated in the same order (left-fold
+        dot product and norms, one division, DECIMAL(18,6)), ranked
+        (score desc, neighbor_id asc). None (the caller runs
+        ``_transform``) for the 'expr' family, when the list read
+        declines, for a NULL, ragged, non-finite or zero vector, or over
+        ``_DRIVER_MAX_PAIRS`` scored pairs."""
+        if (
+            type(self)._transform is not IvfCosineTopK._transform
+            or self.input_filter is not None
+            or self.update
+            or self.assign_family != "blas"
+        ):
+            return None
+        centroids = self._centroids()
+        lists = self._driver_lists()
+        if lists is None:
+            return None
+        span, nids, cvt, cn = lists
+        rows = df.select(
+            F.col(self.query_id).alias("query_id"),
+            F.col(self.query_vec).cast("array<double>").alias("qv"),
+        ).collect()
+        if not rows:
+            return {}
+        qids = [r["query_id"] for r in rows]
+        if any(q is None for q in qids) or any(
+            v is None or len(v) != len(cvt) or None in v for _, v in rows
+        ):
+            return None
+        if self.exclude_self and not all(isinstance(q, int) for q in qids):
+            return None
+        V = np.array([r["qv"] for r in rows], dtype=np.float64)
+        qn = np.zeros(len(rows))
+        for x in V.T:
+            qn = qn + x * x
+        qn = np.sqrt(qn)
+        if not np.isfinite(V).all() or not qn.all():
+            return None
+        cells = self._nearest_cells(V, centroids, self.n_probe)
+        qrow, cand = [], []
+        for j, probe in enumerate(cells.tolist()):
+            for c in probe:
+                lo, hi = span.get(c, (0, 0))
+                qrow.append(np.full(hi - lo, j))
+                cand.append(np.arange(lo, hi))
+        if not cand:
+            return {}
+        qi, ci = np.concatenate(qrow), np.concatenate(cand)
+        if self.exclude_self:
+            keep = nids[ci] != np.array(qids, dtype=np.int64)[qi]
+            qi, ci = qi[keep], ci[keep]
+        if len(qi) > self._DRIVER_MAX_PAIRS or not cn[ci].all():
+            return None
+        dot = np.zeros(len(qi))
+        for q, c in zip(V.T, cvt):
+            dot = dot + q[qi] * c[ci]
+        units = decimal_units(dot / (qn[qi] * cn[ci]), df.sparkSession)
+        if units is None:
+            return None
+        group_of: dict = {}
+        groups = np.array([group_of.setdefault(q, len(group_of)) for q in qids])[qi]
+        return ranked(list(group_of), groups, nids[ci], units, units / 1e6, self.k)
 
     def _local_probes(self, q: DataFrame, centroids: np.ndarray) -> DataFrame:
         """``q`` (query_id, qv) of a local batch, as a new local relation

@@ -23,13 +23,16 @@ from __future__ import annotations
 import os
 import tempfile
 
+import numpy as np
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
+from warp_pipes_spark.core.driver import decimal_units, summed_ranked
 from warp_pipes_spark.core.fingerprint import get_fingerprint
 from warp_pipes_spark.core.pipe import Pipe
-from warp_pipes_spark.io import BoundedCollect
+from warp_pipes_spark.io import BoundedCollect, DriverArtifact
 from warp_pipes_spark.pipes.cache import CacheManager
 from warp_pipes_spark.text.analysis import tokens_expr, tokens_sql
 
@@ -569,40 +572,20 @@ class Bm25Search(Pipe):
     def _termdf_map(self) -> "dict | None":
         """term -> df as a driver dict, read straight from the termdf
         artifact's Parquet files with pyarrow — ZERO Spark jobs — and
-        memoized per artifact snapshot (``io.memo_on_snapshot``, so a
+        memoized per artifact snapshot (``io.DriverArtifact``, so a
         republish invalidates). None when the artifact is missing or the
         vocabulary exceeds the driver-memory cap."""
-        from warp_pipes_spark.io import memo_on_snapshot
-
         manager = CacheManager(self.index_cache_dir)
         fp = self._index_fingerprint() + "_termdf"
         if not manager.exists(fp):
             return None
-        path = manager.path_for(fp)
-        cap = self._TERMDF_MAP_MAX_ROWS
 
-        def build() -> "dict | None":
-            try:
-                import glob as _glob
+        def prepare(t) -> dict:
+            return dict(zip(t.column("term").to_pylist(), t.column("df").to_pylist()))
 
-                import pyarrow.parquet as pq
-
-                files = sorted(_glob.glob(os.path.join(path, "*.parquet")))
-                if sum(pq.read_metadata(f).num_rows for f in files) > cap:
-                    return None
-                result = {}
-                for f in files:
-                    t = pq.read_table(f, columns=["term", "df"])
-                    result.update(
-                        zip(t.column("term").to_pylist(),
-                            t.column("df").to_pylist())
-                    )
-                return result
-            except Exception:
-                return None
-
-        return memo_on_snapshot(
-            self.corpus.sparkSession, path, build, tag=("termdf_map", cap)
+        return DriverArtifact.read(
+            self.corpus.sparkSession, manager.path_for(fp), ["term", "df"], prepare,
+            tag="termdf_map", max_values=2 * self._TERMDF_MAP_MAX_ROWS,
         )
 
     def _fan_est(self, qterms: DataFrame, stats: DataFrame) -> int:
@@ -621,19 +604,104 @@ class Bm25Search(Pipe):
                 return sum(dfmap.get(t, 0) for t in terms.column("term").to_pylist())
         return qterms.join(stats, "term").agg(F.sum("df")).collect()[0][0] or 0
 
+    def _local_terms(self, df: DataFrame) -> list:
+        """Each row of a driver-local batch as (query_id, distinct terms
+        of each leg): a projection of the local relation, so the collect
+        runs no job and the engine's own tokenizer makes the terms."""
+        legs = [self.query_text] + ([self.aux_text_col] if self.aux_text_col else [])
+        return df.select(
+            F.col(self.query_id), *[F.array_distinct(tokens_expr(F.col(c))) for c in legs]
+        ).collect()
+
+    @staticmethod
+    def _terms_fan_out(rows: list, dfmap: dict) -> int:
+        return sum(dfmap.get(t, 0) for r in rows for terms in r[1:] if terms for t in terms)
+
     def _local_fan_est(self, df: DataFrame) -> "int | None":
         """``_fan_est`` of a driver-local query batch, with no Spark job:
-        each leg's distinct terms are a projection of the local relation
-        (its collect runs no job), summed over the termdf dict. None
-        without the dict."""
+        each leg's distinct terms (``_local_terms``) summed over the
+        termdf dict. None without the dict."""
         dfmap = self._termdf_map()
         if dfmap is None:
             return None
-        legs = [self.query_text] + ([self.aux_text_col] if self.aux_text_col else [])
-        rows = df.select(
-            *[F.array_distinct(tokens_expr(F.col(c))) for c in legs]
-        ).collect()
-        return sum(dfmap.get(t, 0) for r in rows for terms in r if terms for t in terms)
+        return self._terms_fan_out(self._local_terms(df), dfmap)
+
+    def _driver_postings(self):
+        """The baked index as driver arrays, memoized per snapshot:
+        ``(span, doc_ids, ts)`` with the rows grouped by term, ``span``
+        mapping a term to its [lo, hi) rows and ``ts`` the exact
+        ``_ts_long`` contribution. None when ``io.DriverArtifact``
+        declines the read."""
+        spark = self.corpus.sparkSession
+        manager = CacheManager(self.index_cache_dir)
+        fp = self._index_fingerprint() + "_postings"
+        if not manager.exists(fp):
+            return None
+
+        def prepare(t):
+            import pyarrow.compute as pc
+
+            t = t.filter(pc.is_valid(t.column("term")))
+            if t.column("doc_id").null_count or t.column("score_d").null_count:
+                return None
+            ts = decimal_units(t.column("score_d").to_numpy(), spark)
+            if ts is None:
+                return None
+            terms = pc.dictionary_encode(t.column("term").combine_chunks())
+            codes = terms.indices.to_numpy(zero_copy_only=False)
+            order = np.argsort(codes, kind="stable")
+            hi = np.cumsum(np.bincount(codes, minlength=len(terms.dictionary)))
+            lo = hi - np.bincount(codes, minlength=len(terms.dictionary))
+            span = dict(zip(terms.dictionary.to_pylist(), zip(lo.tolist(), hi.tolist())))
+            return span, t.column("doc_id").to_numpy()[order], ts[order]
+
+        return DriverArtifact.read(
+            spark, manager.path_for(fp), ["term", "doc_id", "score_d"], prepare,
+            tag="bm25_driver_postings",
+        )
+
+    def _driver_topk(self, df: DataFrame) -> "dict | None":
+        """The engine's top-k of a driver-local batch computed on the
+        driver, ``{query_id: [(idx, score), ...]}`` in rank order: each
+        query's postings are read from ``_driver_postings``, their exact
+        contributions summed per (query, doc) and ranked (score desc, idx
+        asc), the rows ``_transform`` returns. None (the caller runs
+        ``_transform``) for the aux, filtered or temperature-scaled
+        engine, without the termdf dict, over ``_EXHAUSTIVE_MAX_FAN_OUT``
+        posting rows, or when the index read declines."""
+        if (
+            type(self)._transform is not Bm25Search._transform
+            or self.input_filter is not None
+            or self.update
+            or self.aux_text_col
+            or self.filter_key
+            or self.temperature != 1.0
+        ):
+            return None
+        dfmap = self._termdf_map()
+        if dfmap is None:
+            return None
+        rows = self._local_terms(df)
+        if self._terms_fan_out(rows, dfmap) > self._EXHAUSTIVE_MAX_FAN_OUT:
+            return None
+        postings = self._driver_postings()
+        if postings is None:
+            return None
+        span, doc_ids, ts = postings
+        group_of: dict = {}
+        groups, sel = [], []
+        for qid, terms in rows:
+            if qid is None:
+                return None
+            g = group_of.setdefault(qid, len(group_of))
+            for t in terms or ():
+                lo, hi = span.get(t, (0, 0))
+                groups.append(np.full(hi - lo, g))
+                sel.append(np.arange(lo, hi))
+        if not sel:
+            return {}
+        sel = np.concatenate(sel)
+        return summed_ranked(list(group_of), np.concatenate(groups), doc_ids[sel], ts[sel], self.k)
 
     def _term_stats(self, postings: DataFrame) -> DataFrame:
         """Per-term document frequency ``(term, df)`` — the vocabulary-sized

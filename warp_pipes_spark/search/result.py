@@ -22,8 +22,14 @@ sentinels are kept.
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
+
+from warp_pipes_spark.core.driver import decimal_units
 
 RESULT_COLS = ("query_id", "idx", "score")
 
@@ -165,3 +171,71 @@ def rrf_fuse(*ranked: DataFrame, c: float = 60.0, k: int = 10) -> DataFrame:
             F.col("rrf").cast("decimal(18,6)").cast("double").alias("rrf"),
         )
     )
+
+
+# -- driver twins ------------------------------------------------------------
+# The same algebra over result sets already on the driver, as
+# ``{query_id: [(idx, score), ...]}`` (a top-k's rows in rank order): each
+# returns the rows its Spark twin above returns, bit for bit.
+
+
+def topk_local(results: dict, k: int) -> dict:
+    """:func:`topk_results` on the driver."""
+    out = {}
+    for q, rows in results.items():
+        top = sorted(rows, key=lambda r: (-r[1], r[0]))[: max(k, 0)]
+        if top:
+            out[q] = top
+    return out
+
+
+def merge_local(a: dict, b: dict) -> "dict | None":
+    """:func:`merge_results` on the driver; None when one side holds a
+    (query, idx) more than twice, whose double sum depends on the order
+    Spark adds it in."""
+
+    def side(results: dict) -> "dict | None":
+        out: dict = {}
+        for q, rows in results.items():
+            sums, seen = {}, {}
+            for idx, score in rows:
+                if idx >= 0:
+                    seen[idx] = seen.get(idx, 0) + 1
+                    sums[idx] = sums.get(idx, 0.0) + score
+            if any(n > 2 for n in seen.values()):
+                return None
+            if sums:
+                out[q] = sums
+        return out
+
+    sa, sb = side(a), side(b)
+    if sa is None or sb is None:
+        return None
+    out = {}
+    for q in {**sa, **sb}:
+        ra, rb = sa.get(q, {}), sb.get(q, {})
+        min_a = min((s for s in ra.values() if math.isfinite(s)), default=0.0)
+        min_b = min((s for s in rb.values() if math.isfinite(s)), default=0.0)
+        out[q] = [(idx, ra.get(idx, min_a) + rb.get(idx, min_b)) for idx in {**ra, **rb}]
+    return out
+
+
+def rrf_local(a: dict, b: dict, spark, c: float = 60.0, k: int = 10) -> dict:
+    """:func:`rrf_fuse` of two ranked result sets on the driver: each
+    rank's contribution is the same DECIMAL(18,6), summed exactly in
+    scaled longs."""
+    depth = max([len(rows) for rows in (*a.values(), *b.values())], default=0)
+    rr = decimal_units(1.0 / (float(c) + np.arange(1, depth + 1, dtype=np.float64)), spark)
+    sums: dict = {}
+    for results in (a, b):
+        for q, rows in results.items():
+            per_q = sums.setdefault(q, {})
+            for rank, (idx, _score) in enumerate(rows):
+                if idx >= 0:
+                    per_q[idx] = per_q.get(idx, 0) + int(rr[rank])
+    out = {}
+    for q, per_q in sums.items():
+        top = sorted(per_q.items(), key=lambda r: (-r[1], r[0]))[: max(k, 0)]
+        if top:
+            out[q] = [(idx, units / 1e6) for idx, units in top]
+    return out
