@@ -1018,11 +1018,11 @@ def _local(spark, df):
     return spark.createDataFrame(df.toArrow(), schema=df.schema)
 
 
-def test_index_serves_a_batch_in_at_most_seven_jobs(spark, tmp_path):
-    """A 16-query batch from a Python list, embedded by a pandas UDF,
-    through BM25 + IVF with RRF: the batch is collected once, the chain
-    runs over a local relation and its rows come back in one collect;
-    the caller's collect of the result runs no job."""
+def _jobs_per_served_batch(spark, tmp_path, group):
+    """Spark jobs of one warm 16-query batch from a Python list, embedded
+    by a pandas UDF, through BM25 + IVF with RRF, counted in job group
+    ``group``; asserts the UDF ran once per row (the batch is collected
+    once) and the result has every row."""
     import pandas as pd
     from pyspark.sql.functions import pandas_udf
 
@@ -1046,7 +1046,6 @@ def test_index_serves_a_batch_in_at_most_seven_jobs(spark, tmp_path):
 
     index(batch(1)).collect()  # a warm serving path
     scored.value = 0
-    group = "index_jobs_per_batch"
     sc.setJobGroup(group, "one serving batch")
     try:
         rows = index(batch(2)).collect()
@@ -1054,7 +1053,18 @@ def test_index_serves_a_batch_in_at_most_seven_jobs(spark, tmp_path):
         sc.setLocalProperty("spark.jobGroup.id", None)
     assert len(rows) == 16 * 5
     assert scored.value == 16
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 7
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_index_serves_a_batch_in_at_most_seven_jobs(spark, tmp_path, monkeypatch):
+    """With the engines' driver kernels declined (artifact reads capped
+    at 0), the batch is collected once, the chain runs over a local
+    relation and its rows come back in one collect; the caller's collect
+    of the result runs no job."""
+    from warp_pipes_spark.io import DriverArtifact
+
+    monkeypatch.setattr(DriverArtifact, "MAX_VALUES", 0)
+    assert _jobs_per_served_batch(spark, tmp_path, "index_jobs_per_batch") <= 7
 
 
 def _index_parity(spark, index, queries):
@@ -1137,43 +1147,11 @@ def test_index_local_batch_chains_match_the_plan(spark, tmp_path, monkeypatch):
 
 
 def test_index_answers_a_local_batch_in_one_job(spark, tmp_path):
-    """A 16-query batch from a Python list, embedded by a pandas UDF,
-    through BM25 + IVF with RRF: the batch collect is the only Spark job
-    (its one evaluation of the UDF is the only Python work); the engines
-    and the fusion answer on the driver, and the caller's collect of the
-    result runs no job."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    from warp_pipes_spark.search.index import Index
-
-    words, docs, bm25, ivf = _serve_fixture(spark, tmp_path)
-    index = Index(
-        corpus=docs, engines=[bm25, ivf], k=5,
-        merge_previous_results=True, merge_strategy="rrf",
-    )
-    sc = spark.sparkContext
-    scored = sc.accumulator(0)
-
-    def embed(texts: pd.Series) -> pd.Series:
-        scored.add(len(texts))
-        return texts.map(lambda t: [float(len(w)) + (hash(w) % 7) for w in t.split()][:2] * 3)
-
-    def batch(seed):
-        raw = _query_batch(spark, words, 16, seed).drop("embedding")
-        return raw.withColumn("embedding", pandas_udf(embed, "array<double>")("text"))
-
-    index(batch(1)).collect()  # a warm serving path
-    scored.value = 0
-    group = "index_jobs_per_local_batch"
-    sc.setJobGroup(group, "one serving batch")
-    try:
-        rows = index(batch(2)).collect()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    assert len(rows) == 16 * 5
-    assert scored.value == 16
-    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    """The same batch with the driver kernels on: the batch collect is
+    the only Spark job (its one evaluation of the UDF is the only Python
+    work); the engines and the fusion answer on the driver, and the
+    caller's collect of the result runs no job."""
+    assert _jobs_per_served_batch(spark, tmp_path, "index_jobs_per_local_batch") == 1
 
 
 def test_index_local_batch_falls_back_to_the_spark_chain(spark, tmp_path, monkeypatch):
@@ -1181,10 +1159,12 @@ def test_index_local_batch_falls_back_to_the_spark_chain(spark, tmp_path, monkey
     with an aux text or a term filter, a fan-out over the exhaustive
     cut, or a BM25 index without its termdf artifact: the batch runs
     the Spark chain over the local relation, with the rows of the chain
-    over the caller's frame."""
+    over the caller's frame. A kernel declined on the fan-out leaves
+    the batch's terms to the chain's fan-out estimate."""
     import shutil
 
     from warp_pipes_spark.pipes.cache import CacheManager
+    from warp_pipes_spark.search import bm25 as bm25_module
     from warp_pipes_spark.search.bm25 import Bm25Search
     from warp_pipes_spark.search.index import Index
     from warp_pipes_spark.search.ql import DirichletQLSearch
@@ -1216,11 +1196,71 @@ def test_index_local_batch_falls_back_to_the_spark_chain(spark, tmp_path, monkey
     with monkeypatch.context() as m:
         m.setattr(Bm25Search, "_EXHAUSTIVE_MAX_FAN_OUT", 0)
         served_by_the_spark_chain(index_of(bm25))
+        # the declined kernel's batch terms serve the chain's fan-out
+        # estimate: one tokenizing collect per batch
+        fresh, tokenized = _local(spark, queries), []
+        real = bm25_module.tokens_expr
+        m.setattr(bm25_module, "tokens_expr", lambda c: tokenized.append(c) or real(c))
+        assert bm25._driver_topk(fresh) is None
+        assert bm25._local_fan_est(fresh) > 0
+        assert len(tokenized) == 1
     index = index_of(bm25)
     assert index._driver_chain(local) is not None
     termdf = CacheManager(bm25.index_cache_dir).path_for(bm25._index_fingerprint() + "_termdf")
     shutil.rmtree(termdf)
     served_by_the_spark_chain(index)
+
+
+def test_ivf_driver_pair_cap_declines_before_building_pairs(spark, tmp_path, monkeypatch):
+    """IVF's driver kernel counts a batch's probed (query, vector) pairs
+    from the list spans and declines over ``_DRIVER_MAX_PAIRS`` pairs or
+    ``_DRIVER_MAX_MULTIPLY_ADDS`` (pairs x dim 6) before it builds any
+    pair array; at either cap it answers."""
+    from warp_pipes_spark.ml import similarity
+    from warp_pipes_spark.ml.similarity import IvfCosineTopK
+
+    words, docs, bm25, ivf = _serve_fixture(spark, tmp_path)
+    local = _local(spark, _query_batch(spark, words, 8, 23))
+    built = []
+
+    def span_rows(lo, n):
+        built.append(int(np.sum(n)))
+        return real(lo, n)
+
+    real = similarity.span_rows
+    monkeypatch.setattr(similarity, "span_rows", span_rows)
+    assert ivf._driver_topk(local)
+    (pairs,) = built
+    monkeypatch.setattr(IvfCosineTopK, "_DRIVER_MAX_PAIRS", pairs - 1)
+    assert ivf._driver_topk(local) is None
+    assert built == [pairs]
+    monkeypatch.setattr(IvfCosineTopK, "_DRIVER_MAX_PAIRS", pairs)
+    assert ivf._driver_topk(local)
+    monkeypatch.setattr(IvfCosineTopK, "_DRIVER_MAX_MULTIPLY_ADDS", 6 * pairs - 1)
+    assert ivf._driver_topk(local) is None
+    assert built == [pairs, pairs]
+    monkeypatch.setattr(IvfCosineTopK, "_DRIVER_MAX_MULTIPLY_ADDS", 6 * pairs)
+    assert ivf._driver_topk(local)
+
+
+def test_index_batch_over_the_result_cap_skips_the_driver_chain(spark, tmp_path, monkeypatch):
+    """A local batch whose |Q| x k result rows exceed
+    ``BoundedCollect.MAX_ROWS`` is not ranked on the driver: it runs the
+    Spark chain over the local relation and is not collected."""
+    from warp_pipes_spark.io import BoundedCollect
+    from warp_pipes_spark.search.index import Index
+
+    words, docs, bm25, ivf = _serve_fixture(spark, tmp_path)
+    index = Index(corpus=docs, engines=[bm25, ivf], k=5, merge_previous_results=True)
+    queries = _query_batch(spark, words, 8, 29)
+
+    def no_driver_chain(self, local):
+        raise AssertionError("driver chain over the result cap")
+
+    monkeypatch.setattr(BoundedCollect, "MAX_ROWS", 8 * 5 - 1)
+    monkeypatch.setattr(Index, "_driver_chain", no_driver_chain)
+    got, rows = _index_parity(spark, index, queries)
+    assert rows and not got.isLocal()
 
 
 def test_index_wide_batch_runs_the_chain_over_the_callers_frame(spark, tmp_path, monkeypatch):

@@ -46,6 +46,14 @@ def decimal_units(values, spark):
     return units
 
 
+def span_rows(lo, n):
+    """Row numbers ``lo[i] .. lo[i] + n[i] - 1`` of every span, in span
+    order, as one int64 array (no per-span arrays)."""
+    lo = np.asarray(lo, dtype=np.int64)
+    n = np.asarray(n, dtype=np.int64)
+    return np.arange(n.sum()) - np.repeat(np.cumsum(n) - n - lo, n)
+
+
 def ranked(qids: list, groups, ids, keys, scores, k: int) -> dict:
     """``{qids[g]: [(id, score), ...]}``: each group's top ``k`` rows by
     (key desc, id asc), in rank order: a ``row_number`` window over

@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, LongType, StructField, StructType
 
-from warp_pipes_spark.core.driver import decimal_units, ranked
+from warp_pipes_spark.core.driver import decimal_units, ranked, span_rows
 from warp_pipes_spark.core.pipe import Pipe
 from warp_pipes_spark.io import BoundedCollect, DriverArtifact, local_frame
 from warp_pipes_spark.pipes.cache import CacheManager
@@ -765,9 +765,14 @@ class IvfCosineTopK(Pipe):
     _no_fingerprint = ("corpus", "centroid_cache_dir", "index_cache_dir")
 
     # query x candidate pairs a driver-local batch may score on the
-    # driver: a 16-query serve batch scores about 3,200; a million pairs
-    # is 8 MB per array, with the dot product's time linear in dim
+    # driver (a 16-query serve batch scores about 3,200), and their
+    # multiply-adds (pairs x dim). The pair cap bounds memory: five 8-byte
+    # arrays per pair, 40 MB at the cap. The multiply-add cap bounds time
+    # at the largest batches measured (4 vCPU, lists near
+    # io.DriverArtifact's read cap): about 1M pairs at dim 64 and 128k at
+    # dim 512 cost 1.2-1.3 CPU-s on the driver against 8.7-9.0 in Spark
     _DRIVER_MAX_PAIRS = 1 << 20
+    _DRIVER_MAX_MULTIPLY_ADDS = 1 << 26
 
     def _centroids(self) -> np.ndarray:
         """Trained centroids, served from a fingerprint-keyed cache — the
@@ -962,11 +967,11 @@ class IvfCosineTopK(Pipe):
 
     def _driver_lists(self):
         """The IVF lists as driver arrays, memoized per snapshot:
-        ``(span, neighbor_ids, cvt, cn)`` with the rows grouped by cell,
-        ``span`` mapping a cell to its [lo, hi) rows and ``cvt`` the
-        vectors as a (dim, rows) matrix. None when ``io.DriverArtifact``
-        declines the read or a list row is NULL, ragged or has a
-        non-integer id."""
+        ``(cells, neighbor_ids, cvt, cn)`` with the rows sorted by cell
+        (``cells`` the row's cell, so a cell's rows are a
+        ``searchsorted`` span) and ``cvt`` the vectors as a (dim, rows)
+        matrix. None when ``io.DriverArtifact`` declines the read or a
+        list row is NULL, ragged or has a non-integer id."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -990,11 +995,9 @@ class IvfCosineTopK(Pipe):
                 return None
             cells = cell.to_numpy()
             order = np.argsort(cells, kind="stable")
-            keys, lo, counts = np.unique(cells[order], return_index=True, return_counts=True)
-            span = dict(zip(keys.tolist(), zip(lo.tolist(), (lo + counts).tolist())))
             vecs = vals.to_numpy().reshape(len(cells), int(lens[0]))[order]
-            return (span, nid.to_numpy()[order], np.ascontiguousarray(vecs.T),
-                    cn.to_numpy()[order])
+            return (cells[order].astype(np.int64), nid.to_numpy()[order],
+                    np.ascontiguousarray(vecs.T), cn.to_numpy()[order])
 
         return DriverArtifact.read(
             self.corpus.sparkSession, manager.path_for(fp),
@@ -1011,7 +1014,8 @@ class IvfCosineTopK(Pipe):
         (score desc, neighbor_id asc). None (the caller runs
         ``_transform``) for the 'expr' family, when the list read
         declines, for a NULL, ragged, non-finite or zero vector, or over
-        ``_DRIVER_MAX_PAIRS`` scored pairs."""
+        ``_DRIVER_MAX_PAIRS`` probed pairs or ``_DRIVER_MAX_MULTIPLY_ADDS``
+        (both counted before any pair is built)."""
         if (
             type(self)._transform is not IvfCosineTopK._transform
             or self.input_filter is not None
@@ -1023,7 +1027,7 @@ class IvfCosineTopK(Pipe):
         lists = self._driver_lists()
         if lists is None:
             return None
-        span, nids, cvt, cn = lists
+        cells, nids, cvt, cn = lists
         rows = df.select(
             F.col(self.query_id).alias("query_id"),
             F.col(self.query_vec).cast("array<double>").alias("qv"),
@@ -1044,24 +1048,31 @@ class IvfCosineTopK(Pipe):
         qn = np.sqrt(qn)
         if not np.isfinite(V).all() or not qn.all():
             return None
-        cells = self._nearest_cells(V, centroids, self.n_probe)
-        qrow, cand = [], []
-        for j, probe in enumerate(cells.tolist()):
-            for c in probe:
-                lo, hi = span.get(c, (0, 0))
-                qrow.append(np.full(hi - lo, j))
-                cand.append(np.arange(lo, hi))
-        if not cand:
-            return {}
-        qi, ci = np.concatenate(qrow), np.concatenate(cand)
+        probes = self._nearest_cells(V, centroids, self.n_probe)
+        lo = np.searchsorted(cells, probes, "left").ravel()
+        n = np.searchsorted(cells, probes, "right").ravel() - lo
+        pairs = int(n.sum())
+        if (
+            pairs > self._DRIVER_MAX_PAIRS
+            or pairs * len(cvt) > self._DRIVER_MAX_MULTIPLY_ADDS
+        ):
+            return None
+        qi = np.repeat(np.arange(len(rows)).repeat(probes.shape[1]), n)
+        ci = span_rows(lo, n)
         if self.exclude_self:
             keep = nids[ci] != np.array(qids, dtype=np.int64)[qi]
             qi, ci = qi[keep], ci[keep]
-        if len(qi) > self._DRIVER_MAX_PAIRS or not cn[ci].all():
+        if not cn[ci].all():
             return None
+        # Spark's left fold (acc + q_d * c_d), one dimension at a time, in
+        # preallocated buffers
         dot = np.zeros(len(qi))
+        qd, cd = np.empty(len(qi)), np.empty(len(qi))
         for q, c in zip(V.T, cvt):
-            dot = dot + q[qi] * c[ci]
+            np.take(q, qi, out=qd)
+            np.take(c, ci, out=cd)
+            np.multiply(qd, cd, out=qd)
+            np.add(dot, qd, out=dot)
         units = decimal_units(dot / (qn[qi] * cn[ci]), df.sparkSession)
         if units is None:
             return None

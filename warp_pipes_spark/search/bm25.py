@@ -20,8 +20,10 @@ deterministic re-runs at any parallelism).
 
 from __future__ import annotations
 
+import bisect
 import os
 import tempfile
+import weakref
 
 import numpy as np
 
@@ -29,7 +31,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
-from warp_pipes_spark.core.driver import decimal_units, summed_ranked
+from warp_pipes_spark.core.driver import decimal_units, span_rows, summed_ranked
 from warp_pipes_spark.core.fingerprint import get_fingerprint
 from warp_pipes_spark.core.pipe import Pipe
 from warp_pipes_spark.io import BoundedCollect, DriverArtifact
@@ -186,6 +188,9 @@ class Bm25Search(Pipe):
         # the algebra and the safety argument.
         self.maxscore = maxscore
         self.index_cache_dir = index_cache_dir or _default_index_cache_dir()
+        # (weak reference to the last local batch, its _local_terms rows):
+        # a driver kernel that declines leaves them to the Spark chain
+        self._last_terms: tuple = (lambda: None, None)
 
     # maxscore is fingerprint-exempt: it is a pure physical-plan choice
     # (bit-identical results), so it must not invalidate caches
@@ -607,11 +612,17 @@ class Bm25Search(Pipe):
     def _local_terms(self, df: DataFrame) -> list:
         """Each row of a driver-local batch as (query_id, distinct terms
         of each leg): a projection of the local relation, so the collect
-        runs no job and the engine's own tokenizer makes the terms."""
+        runs no job and the engine's own tokenizer makes the terms. The
+        last batch's rows are kept, so a declined driver kernel and the
+        Spark chain after it collect them once."""
+        if self._last_terms[0]() is df:
+            return self._last_terms[1]
         legs = [self.query_text] + ([self.aux_text_col] if self.aux_text_col else [])
-        return df.select(
+        rows = df.select(
             F.col(self.query_id), *[F.array_distinct(tokens_expr(F.col(c))) for c in legs]
         ).collect()
+        self._last_terms = (weakref.ref(df), rows)
+        return rows
 
     @staticmethod
     def _terms_fan_out(rows: list, dfmap: dict) -> int:
@@ -628,10 +639,12 @@ class Bm25Search(Pipe):
 
     def _driver_postings(self):
         """The baked index as driver arrays, memoized per snapshot:
-        ``(span, doc_ids, ts)`` with the rows grouped by term, ``span``
-        mapping a term to its [lo, hi) rows and ``ts`` the exact
-        ``_ts_long`` contribution. None when ``io.DriverArtifact``
-        declines the read."""
+        ``(vocab, bounds, doc_ids, ts)`` with the rows sorted by term,
+        ``vocab`` the sorted distinct terms (an Arrow string array), term
+        ``vocab[i]`` owning rows ``bounds[i]`` to ``bounds[i + 1]``, and
+        ``ts`` the exact ``_ts_long`` contribution. 16 bytes per posting
+        plus the vocabulary's bytes and 12 per term. None when
+        ``io.DriverArtifact`` declines the read."""
         spark = self.corpus.sparkSession
         manager = CacheManager(self.index_cache_dir)
         fp = self._index_fingerprint() + "_postings"
@@ -642,18 +655,21 @@ class Bm25Search(Pipe):
             import pyarrow.compute as pc
 
             t = t.filter(pc.is_valid(t.column("term")))
-            if t.column("doc_id").null_count or t.column("score_d").null_count:
+            if (
+                t.num_rows == 0
+                or t.column("doc_id").null_count
+                or t.column("score_d").null_count
+            ):
                 return None
+            t = t.sort_by("term")
             ts = decimal_units(t.column("score_d").to_numpy(), spark)
             if ts is None:
                 return None
-            terms = pc.dictionary_encode(t.column("term").combine_chunks())
-            codes = terms.indices.to_numpy(zero_copy_only=False)
-            order = np.argsort(codes, kind="stable")
-            hi = np.cumsum(np.bincount(codes, minlength=len(terms.dictionary)))
-            lo = hi - np.bincount(codes, minlength=len(terms.dictionary))
-            span = dict(zip(terms.dictionary.to_pylist(), zip(lo.tolist(), hi.tolist())))
-            return span, t.column("doc_id").to_numpy()[order], ts[order]
+            terms = t.column("term").combine_chunks()
+            new_term = pc.not_equal(terms.slice(1), terms.slice(0, len(terms) - 1))
+            starts = np.flatnonzero(np.r_[True, new_term.to_numpy(zero_copy_only=False)])
+            return (terms.take(starts), np.r_[starts, len(terms)],
+                    t.column("doc_id").to_numpy(), ts)
 
         return DriverArtifact.read(
             spark, manager.path_for(fp), ["term", "doc_id", "score_d"], prepare,
@@ -687,21 +703,31 @@ class Bm25Search(Pipe):
         postings = self._driver_postings()
         if postings is None:
             return None
-        span, doc_ids, ts = postings
+        vocab, bounds, doc_ids, ts = postings
         group_of: dict = {}
-        groups, sel = [], []
+        groups, qterms = [], []
         for qid, terms in rows:
             if qid is None:
                 return None
             g = group_of.setdefault(qid, len(group_of))
             for t in terms or ():
-                lo, hi = span.get(t, (0, 0))
-                groups.append(np.full(hi - lo, g))
-                sel.append(np.arange(lo, hi))
-        if not sel:
-            return {}
-        sel = np.concatenate(sel)
-        return summed_ranked(list(group_of), np.concatenate(groups), doc_ids[sel], ts[sel], self.k)
+                groups.append(g)
+                qterms.append(t)
+
+        def code(term: str) -> int:
+            # binary search of the sorted vocabulary (UTF-8 byte order is
+            # code point order); -1 for an unindexed term
+            i = bisect.bisect_left(vocab, term, key=lambda s: s.as_py())
+            return i if i < len(vocab) and vocab[i].as_py() == term else -1
+
+        codes = {t: code(t) for t in set(qterms)}
+        c = np.array([codes[t] for t in qterms], dtype=np.int64)
+        g = np.array(groups, dtype=np.int64)[c >= 0]
+        c = c[c >= 0]
+        lo = bounds[c]
+        n = bounds[c + 1] - lo
+        sel = span_rows(lo, n)
+        return summed_ranked(list(group_of), np.repeat(g, n), doc_ids[sel], ts[sel], self.k)
 
     def _term_stats(self, postings: DataFrame) -> DataFrame:
         """Per-term document frequency ``(term, df)`` — the vocabulary-sized

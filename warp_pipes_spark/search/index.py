@@ -206,6 +206,9 @@ class Index(Pipe):
         spark = queries.sparkSession
         # a JVM LocalRelation: its scans run no Python task
         local = spark.createDataFrame(batch, schema=queries.schema)
+        if batch.num_rows * self.k > BoundedCollect.MAX_ROWS:
+            # more result rows than a driver collect may hold
+            return self._chain(local)
         ranked = self._driver_chain(local)
         if ranked is not None:
             # every engine answered from its index on the driver: the
@@ -217,8 +220,6 @@ class Index(Pipe):
             ]
             return local_frame(spark, rows, self._result_schema(spark, batch, queries.schema))
         result = self._chain(local)
-        if batch.num_rows * self.k > BoundedCollect.MAX_ROWS:
-            return result
         # at most |Q| x k rows, returned as a local relation: the caller's
         # collect runs no job and a second scan does not re-run the chain
         return local_frame(spark, result.collect(), result.schema)
