@@ -770,7 +770,7 @@ class IvfCosineTopK(Pipe):
     # arrays per pair, 40 MB at the cap. The multiply-add cap bounds time
     # at the largest batches measured (4 vCPU, lists near
     # io.DriverArtifact's read cap): about 1M pairs at dim 64 and 128k at
-    # dim 512 cost 1.2-1.3 CPU-s on the driver against 8.7-9.0 in Spark
+    # dim 512 cost 1.2-1.4 CPU-s on the driver against 8.7-9.0 in Spark
     _DRIVER_MAX_PAIRS = 1 << 20
     _DRIVER_MAX_MULTIPLY_ADDS = 1 << 26
 
